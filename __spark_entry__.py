@@ -130,6 +130,24 @@ _REWRITTEN_GREENS = [
     # earned green r13 rows on the new impls and dropped; the r13-opt /
     # r14 optimization-rewritten paths below have no driver row on the
     # code that now ships: VERDICT r13 #5 requires fronting them)
+    # the delta-index family moved onto one shared re-send classifier
+    # and cell probe (operators/incremental.py) and one sink scaffold
+    # (streaming/__init__.py); bm25_incremental_search and
+    # tfidf_incremental_top_terms below run it too
+    "streaming_cluster_maintenance_check",
+    "text_dedup_incremental",
+    "lsh_compact_replace_check",
+    "video_dedup_incremental",
+    "lexical_compact_replace_check",
+    "streaming_lexical_ingest_check",
+    "streaming_compaction_span_check",
+    "streaming_lsh_span_check",
+    "lsh_incremental_index_check",
+    "frame_compact_replace_check",
+    "streaming_frame_span_check",
+    "dhash_incremental_index_check",
+    "video_frame_incremental_index_check",
+    "media_curation_funnel_incremental",
     # r13-opt kept in r14: shingle/minhash-band expression trees
     # generated as single SQL strings (dedup.py)
     "minhash_lsh_near_dups",

@@ -32,6 +32,11 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chicago_crime_spark_ml_spark.operators.incremental import (
+    classify_resends,
+    delta_cell_pairs,
+)
+
 FEATURE_DIM = 4
 
 FEATURES_SCHEMA = (
@@ -539,72 +544,25 @@ def dhash_index_delta(
     from new_index_rows — appending the return value never accumulates
     duplicates, and occupancy counts stay exact under stream replays
     (ADVICE r8). Pairs still cover re-ingested docs (the probe runs
-    against index ∪ delta), and the dup-id detection is a broadcast
-    semi-join against the bounded delta — one column-pruned index
-    scan, no corpus shuffle. A re-sent id whose postings DIFFER from
+    against index ∪ delta). A re-sent id whose postings DIFFER from
     its stored ones is an update, not a replay (ADVICE r9): its new
-    postings ARE emitted (detected by one anti-join of the bounded
-    re-sent postings against the stored rows for those ids), and the
-    append-only index then holds both versions' postings — superset
-    recall; callers wanting pure replace delete the id's old rows
-    first.
+    postings ARE emitted, and the append-only index then holds both
+    versions' postings — superset recall; callers wanting pure replace
+    delete the id's old rows first. Both the re-send rule and the
+    probe are the text path's (incremental.classify_resends,
+    incremental.delta_cell_pairs).
 
     ``max_bucket`` is the occupancy guard the batch operator gained in
     r8, now on the incremental path too: a degenerate hot (band, byte)
     cell — flat/black images banding to 0 — would otherwise cost every
     future delta batch O(delta × cell size) forever. Cells above the
-    cap are dropped from BOTH the probe and the index side of the
-    join (recall-only, same semantics as the batch cap); the count is
-    taken over index ∪ delta, so delta == rebuild even when the guard
-    binds. Hot cells are found with a map-side partial aggregation to
-    ≤ n_bands·2^(8·band_bytes) cells and broadcast — no posting-level
-    shuffle."""
+    cap are dropped from BOTH sides of the probe (recall-only, same
+    semantics as the batch cap), counted over index ∪ delta so
+    delta == rebuild even when the guard binds."""
     delta_rows = dhash_band_index(new_hashes, id_col, band_bytes)
-    delta_ids = delta_rows.select(id_col).distinct()
-    # ids the index already holds, bounded by the delta (tiny): index
-    # scan stays map-side via the broadcast semi-join
-    dup_ids = index.select(id_col).join(
-        F.broadcast(delta_ids), id_col, "left_semi"
-    ).distinct()
-    dup_stored = index.join(F.broadcast(dup_ids), id_col, "left_semi")
-    # materialized once (r14): changed_ids is consumed as ``resent``
-    # AND inside fresh's anti-join chain — lazy, the broadcast-join
-    # chain against the stored index re-evaluates per consumer; the
-    # set is bounded by the re-sent ids, so the stored frame is tiny
-    changed_ids = (
-        delta_rows.join(F.broadcast(dup_ids), id_col, "left_semi")
-        .join(dup_stored, [id_col, "band", "byte"], "left_anti")
-        .select(id_col)
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    unchanged_dups = dup_ids.join(changed_ids, id_col, "left_anti")
-    fresh = delta_rows.join(
-        F.broadcast(unchanged_dups), id_col, "left_anti"
-    )
-    both = index.unionByName(fresh).select(
-        "band", "byte", F.col(id_col).alias("__any_id")
-    )
-    probe = delta_rows.select(
-        "band", "byte", F.col(id_col).alias("__new_id")
-    )
-    if max_bucket is not None:
-        hot = (
-            both.groupBy("band", "byte")
-            .agg(F.count(F.lit(1)).alias("_occ"))
-            .filter(F.col("_occ") > max_bucket)
-            .select("band", "byte")
-        )
-        both = both.join(F.broadcast(hot), ["band", "byte"], "left_anti")
-        probe = probe.join(F.broadcast(hot), ["band", "byte"], "left_anti")
-    pairs = (
-        probe.join(both, ["band", "byte"])
-        .filter(F.col("__new_id") != F.col("__any_id"))
-        .select(
-            F.least("__new_id", "__any_id").alias("id_a"),
-            F.greatest("__new_id", "__any_id").alias("id_b"),
-        )
-        .distinct()
+    [fresh], changed_ids = classify_resends([index], [delta_rows], id_col)
+    pairs = delta_cell_pairs(
+        index, fresh, delta_rows, id_col, ["band", "byte"], max_bucket
     )
     if return_resent:
         # the changed-re-send ids (multi-version on append): what the
@@ -966,15 +924,14 @@ def frame_index_delta(
     the blob, so a re-ingested stream's postings are exactly its
     index rows. Without the drop, a replay double-counts the df
     (breaking delta == rebuild at the max_df boundary) and the
-    appended index accumulates duplicates. Detection is a broadcast
-    semi-join against the bounded delta ids — one column-pruned index
-    scan, no corpus shuffle; pairs still cover re-ingested streams
-    (the probe side is index ∪ delta semi-joined to delta ids). A
-    re-sent id whose frame-hash set DIFFERS from its stored postings
-    is an update, not a replay (ADVICE r9): its new postings ARE
-    emitted; the append-only index then holds both versions' frames —
-    superset recall, callers wanting pure replace delete the id's old
-    rows first (or read latest-wins / compact with replace).
+    appended index accumulates duplicates. Pairs still cover
+    re-ingested streams (the probe side is index ∪ delta semi-joined
+    to delta ids). A re-sent id whose frame-hash set DIFFERS from its
+    stored postings is an update, not a replay (ADVICE r9): its new
+    postings ARE emitted; the append-only index then holds both
+    versions' frames — superset recall, callers wanting pure replace
+    delete the id's old rows first (or read latest-wins / compact
+    with replace).
 
     Changed-content detection is EXACT (r11, ADVICE r10 — the
     anti-join alone missed the strict-subset case, e.g. a trimmed
@@ -984,7 +941,7 @@ def frame_index_delta(
     both sets are distinct rows, so containment plus equal cardinality
     forces set equality (the video twin of lexical_index_delta's
     dl = Σ tf identity). Both checks run on the bounded re-sent
-    slice.
+    slice (incremental.classify_resends with ``count_check``).
 
     Exactness and replay idempotence are relative to a SINGLE stored
     version per id (same contract as lexical_index_delta): against a
@@ -997,40 +954,11 @@ def frame_index_delta(
     d = (
         new_sig.select(id_col, "dhash").distinct().localCheckpoint(eager=True)
     )
-    dup_ids = index.select(id_col).join(
-        F.broadcast(d.select(id_col).distinct()), id_col, "left_semi"
-    ).distinct()
-    dup_stored = index.select(id_col, "dhash").join(
-        F.broadcast(dup_ids), id_col, "left_semi"
+    stored = index.select(id_col, "dhash")
+    [fresh], changed_ids = classify_resends(
+        [stored], [d], id_col, count_check=True
     )
-    changed_by_row = (
-        d.join(F.broadcast(dup_ids), id_col, "left_semi")
-        .join(dup_stored, [id_col, "dhash"], "left_anti")
-        .select(id_col)
-    )
-    changed_by_count = (
-        d.join(F.broadcast(dup_ids), id_col, "left_semi")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("_n_delta"))
-        .join(
-            dup_stored.groupBy(id_col).agg(
-                F.count(F.lit(1)).alias("_n_stored")
-            ),
-            id_col,
-        )
-        .filter(F.col("_n_delta") != F.col("_n_stored"))
-        .select(id_col)
-    )
-    # materialized once (r14): same double-consumption as
-    # dhash_index_delta — resent return + fresh's anti-join
-    changed_ids = (
-        changed_by_row.unionByName(changed_by_count)
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    unchanged_dups = dup_ids.join(changed_ids, id_col, "left_anti")
-    fresh = d.join(F.broadcast(unchanged_dups), id_col, "left_anti")
-    both = index.select(id_col, "dhash").unionByName(fresh)
+    both = stored.unionByName(fresh)
     if max_df is not None:
         from pyspark.sql.window import Window  # noqa: PLC0415
 

@@ -1016,11 +1016,14 @@ def compact_ivf_index(
     still compete per id with higher seqs. Requires the store to
     carry ``ingest_seq`` (any index written by the r12+ writers).
 
-    Layout discipline: the rewrite is ``repartition(n, "cell",
-    salt)`` with a per-row salt in [0, files_per_cell) — every
-    (cell, salt) slice lands wholly in one task, so each cell
-    directory gets exactly ``files_per_cell`` files regardless of how
-    many ingests it had. The default 1 is right while cells fit one
+    Layout discipline: a per-row salt in [0, files_per_cell) splits
+    the rows into ``files_per_cell`` slices, written one pass each
+    with ``repartition(n, "cell", "ingest")`` — each pass puts every
+    partition directory wholly in one task, so each cell directory
+    gets exactly ``files_per_cell`` files (one per non-empty slice)
+    regardless of how many ingests it had or how many cores run it (a
+    single repartition over (cell, salt) can hash two slices of a
+    cell into one task). The default 1 is right while cells fit one
     task; at corpus scale set ``files_per_cell ≈ ceil(rows_per_cell /
     target_file_rows)`` so probing one cell still fans out across
     executors instead of reading one giant file serially. The swap
@@ -1127,13 +1130,14 @@ def compact_ivf_index(
         .drop("ingest")
         .withColumnRenamed("_ing", "ingest")
         .withColumn("_salt", salt)
-        .repartition(n, "cell", "_salt")
-        .drop("_salt")
     )
     staging = path.rstrip("/") + "__compacting"
-    out.write.mode("overwrite").partitionBy("cell", "ingest").parquet(
-        staging
-    )
+    for k in range(files_per_cell):
+        out.filter(F.col("_salt") == k).drop("_salt").repartition(
+            n, "cell", "ingest"
+        ).write.mode("append" if k else "overwrite").partitionBy(
+            "cell", "ingest"
+        ).parquet(staging)
     import os as _os  # noqa: PLC0415
     import shutil as _shutil  # noqa: PLC0415
 

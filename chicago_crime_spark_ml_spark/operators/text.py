@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from chicago_crime_spark_ml_spark.operators.incremental import classify_resends
+
 TOKEN_PATTERN = r"\s+"
 
 
@@ -457,32 +459,16 @@ def lexical_index_delta(
     the changed-re-send id set — exactly the ids that become
     MULTI-VERSION when the caller appends the fresh rows. The
     streaming sink writes them to the store's ``_mv`` manifest so the
-    latest-wins readers never need an aggregate over the store; the
-    set falls out of the dup-detection joins above at no extra
-    cost."""
+    latest-wins readers never need an aggregate over the store. The
+    decision itself is the family's shared one
+    (incremental.classify_resends, anti-joins on doclen and
+    postings)."""
     d_post, d_len = lexical_index(new_docs, text_col, id_col)
     d_post = d_post.localCheckpoint(eager=True)
     d_len = d_len.localCheckpoint(eager=True)
-    delta_ids = d_len.select(id_col)
-    dup_ids = doclen.select(id_col).join(
-        F.broadcast(delta_ids), id_col, "left_semi"
-    ).distinct()
-    dup_stored_post = postings.join(F.broadcast(dup_ids), id_col, "left_semi")
-    dup_stored_len = doclen.join(F.broadcast(dup_ids), id_col, "left_semi")
-    changed_by_len = (
-        d_len.join(F.broadcast(dup_ids), id_col, "left_semi")
-        .join(dup_stored_len, [id_col, "dl"], "left_anti")
-        .select(id_col)
+    (fresh_len, fresh_post), changed_ids = classify_resends(
+        [doclen, postings], [d_len, d_post], id_col
     )
-    changed_by_post = (
-        d_post.join(F.broadcast(dup_ids), id_col, "left_semi")
-        .join(dup_stored_post, [id_col, "term", "tf"], "left_anti")
-        .select(id_col)
-    )
-    changed_ids = changed_by_len.unionByName(changed_by_post).distinct()
-    unchanged_dups = dup_ids.join(changed_ids, id_col, "left_anti")
-    fresh_post = d_post.join(F.broadcast(unchanged_dups), id_col, "left_anti")
-    fresh_len = d_len.join(F.broadcast(unchanged_dups), id_col, "left_anti")
     if return_resent:
         return fresh_post, fresh_len, changed_ids
     return fresh_post, fresh_len

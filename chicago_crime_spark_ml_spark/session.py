@@ -65,26 +65,15 @@ def get_spark(
         # subset at sf0.1; risk profile at scale is bounded because SHJ
         # is only chosen when the build side fits the planner/AQE size
         # conditions (64m per partition — spill-safe since Spark 3's
-        # spillable shuffled-hash). Env-parameterized: operators of a
-        # memory-tight cluster set SPARK_GRAFT_PREFER_SMJ=true to
-        # restore the always-sort default.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_MAX", "64m"),
-        )
+        # spillable shuffled-hash).
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         # r13-opt (guide §2.2/§9): post-shuffle partitions coalesced
         # toward 256 MB instead of the 64 MB default — fewer, larger
         # reduce tasks (the quadratic shuffle-block growth lever). No
         # effect at bench scale (every sf0.1 shuffle is < 64 MB, AQE
         # already coalesces to 1), sizes cluster runs correctly.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "256m"),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

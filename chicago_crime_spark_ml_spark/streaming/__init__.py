@@ -189,6 +189,29 @@ def stream_dedup(
     )
 
 
+def _start_sink(
+    stream: DataFrame,
+    sink,
+    checkpoint: str,
+    query_name: str,
+    output_mode: str = "append",
+):
+    """Start ``stream`` into a foreachBatch ``sink(batch_df, batch_id)``
+    that never sees an empty micro-batch; returns the StreamingQuery."""
+
+    def guarded(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            sink(batch_df, batch_id)
+
+    return (
+        stream.writeStream.outputMode(output_mode)
+        .foreachBatch(guarded)
+        .option("checkpointLocation", checkpoint)
+        .queryName(query_name)
+        .start()
+    )
+
+
 def incremental_rollup_to_parquet(
     agg: DataFrame,
     path: str,
@@ -217,21 +240,13 @@ def incremental_rollup_to_parquet(
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         if try_read_parquet(spark, path) is not None:
             merge_parquet(spark, path, batch_df, keys)
         else:
             batch_df.write.mode("overwrite").parquet(path)
 
-    return (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return _start_sink(agg, sink, checkpoint, query_name, "update")
 
 
 def _read_state_excluding_batch(
@@ -344,6 +359,18 @@ def _write_multiversion_manifest(
     rows.write.mode("overwrite").parquet(
         f"{_mv_path(path)}/batch_id={batch_id}"
     )
+
+
+def _append_store_batch(
+    rows: DataFrame, resent_ids: DataFrame, path: str, batch_id: int, id_col: str
+) -> None:
+    """Land a micro-batch's rows in a ``batch_id=N``-partitioned store:
+    the batch's partition with overwrite (a replayed batch rewrites its
+    own rows instead of double-appending — parquet append is not
+    idempotent), then the store's ``_mv`` manifest, in that order (see
+    _write_multiversion_manifest)."""
+    rows.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
+    _write_multiversion_manifest(resent_ids, path, batch_id, id_col)
 
 
 def _read_state_latest_by(
@@ -554,8 +581,6 @@ def streaming_near_dup_ingest(
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         # probe the index by ATTEMPTING the read, falling back to the
         # empty frame when the path doesn't exist yet: an os.path check
@@ -590,22 +615,12 @@ def streaming_near_dup_ingest(
             return_resent=True,
         )
         delta_rows = delta_rows.localCheckpoint(eager=True)
-        resent = resent.localCheckpoint(eager=True)
         pairs.write.mode("overwrite").parquet(
             f"{pairs_path}/batch_id={batch_id}"
         )
-        delta_rows.write.mode("overwrite").parquet(
-            f"{index_path}/batch_id={batch_id}"
-        )
-        _write_multiversion_manifest(resent, index_path, batch_id, id_col)
+        _append_store_batch(delta_rows, resent, index_path, batch_id, id_col)
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return _start_sink(docs, sink, checkpoint, query_name)
 
 
 def streaming_media_near_dup_ingest(
@@ -671,8 +686,6 @@ def streaming_media_near_dup_ingest(
         )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         if modality == "video":
             idx_schema = f"{id_col} long, dhash string"
@@ -708,22 +721,12 @@ def streaming_media_near_dup_ingest(
                 return_resent=True,
             )
         delta_rows = delta_rows.localCheckpoint(eager=True)
-        resent = resent.localCheckpoint(eager=True)
         pairs.write.mode("overwrite").parquet(
             f"{pairs_path}/batch_id={batch_id}"
         )
-        delta_rows.write.mode("overwrite").parquet(
-            f"{index_path}/batch_id={batch_id}"
-        )
-        _write_multiversion_manifest(resent, index_path, batch_id, id_col)
+        _append_store_batch(delta_rows, resent, index_path, batch_id, id_col)
 
-    return (
-        media.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return _start_sink(media, sink, checkpoint, query_name)
 
 
 def streaming_ivf_ingest(
@@ -757,8 +760,6 @@ def streaming_ivf_ingest(
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ivf_index_delta(
             batch_df.sparkSession,
             index_path,
@@ -768,13 +769,7 @@ def streaming_ivf_ingest(
             id_col=id_col,
         )
 
-    return (
-        vectors.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return _start_sink(vectors, sink, checkpoint, query_name)
 
 
 def streaming_cluster_maintenance(
@@ -836,14 +831,15 @@ def streaming_cluster_maintenance(
         lsh_index_delta,
         rescore_jaccard,
     )
+    from chicago_crime_spark_ml_spark.operators.incremental import (  # noqa: PLC0415
+        classify_resends,
+    )
     from chicago_crime_spark_ml_spark.sources.io import (  # noqa: PLC0415
         merge_parquet_partitioned,
         try_read_parquet,
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         batch_docs = batch_df.select(id_col, text_col).localCheckpoint(
             eager=True
@@ -868,7 +864,6 @@ def streaming_cluster_maintenance(
             return_resent=True,
         )
         delta_rows = delta_rows.localCheckpoint(eager=True)
-        resent_idx = resent_idx.localCheckpoint(eager=True)
         # batch-precedence corpus with UNIQUE ids: a re-sent id's
         # stored text is shadowed (changed content rescans against the
         # new text), and duplicate (id, text) rows can never multiply
@@ -937,53 +932,29 @@ def streaming_cluster_maintenance(
                 )
         # appends LAST: pairs/labels above read index ∪ fresh lazily,
         # and appending first would let a batch collide with itself
-        delta_rows.write.mode("overwrite").parquet(
-            f"{index_path}/batch_id={batch_id}"
+        _append_store_batch(
+            delta_rows, resent_idx, index_path, batch_id, id_col
         )
-        _write_multiversion_manifest(
-            resent_idx, index_path, batch_id, id_col
+        # the docs store classifies on its own (id, text) rows — NOT
+        # the index's band rows (two texts can collide to identical
+        # band rows): identical re-sends append nothing (replay
+        # idempotence), while a CHANGED-content re-send IS written and
+        # recorded, so the latest-wins readers above resolve to the new
+        # text (r11, ADVICE r10). stored_docs already excludes this
+        # batch_id, so a replay rewrites its own rows instead of
+        # emptying them.
+        [fresh_docs], resent_docs = classify_resends(
+            [stored_docs], [batch_docs], id_col
         )
-        # (id, text) rows not already current in the docs store land in
-        # this batch's partition: identical re-sends append nothing
-        # (replay idempotence), while a CHANGED-content re-send IS
-        # written — its newer batch id makes the latest-wins readers
-        # above resolve to the new text (r11, ADVICE r10; the id-only
-        # anti-join kept the stale text forever). stored_docs already
-        # excludes this batch_id, so a replay rewrites its own rows
-        # instead of emptying them.
-        fresh_docs = batch_docs.join(
-            stored_docs, [id_col, text_col], "left_anti"
-        ).localCheckpoint(eager=True)
-        # the docs store's own changed-re-send set, on the store's
-        # (id, text) semantics — NOT the index's band-row semantics
-        # (two texts can collide to identical band rows): fresh ids
-        # the store already holds. One broadcast-filtered scan of the
-        # store's id column — the same pass the rescore corpus above
-        # already makes this batch.
-        resent_docs = (
-            stored_docs.select(id_col)
-            .join(
-                F.broadcast(fresh_docs.select(id_col)),
-                id_col,
-                "left_semi",
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        fresh_docs.write.mode("overwrite").parquet(
-            f"{docs_path}/batch_id={batch_id}"
-        )
-        _write_multiversion_manifest(
-            resent_docs, docs_path, batch_id, id_col
+        _append_store_batch(
+            fresh_docs.localCheckpoint(eager=True),
+            resent_docs,
+            docs_path,
+            batch_id,
+            id_col,
         )
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return _start_sink(docs, sink, checkpoint, query_name)
 
 
 def streaming_lexical_ingest(
@@ -1016,8 +987,6 @@ def streaming_lexical_ingest(
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         # LATEST-WINS reads (r11): the delta operator's changed-content
         # detection is provably exact only against a SINGLE stored
@@ -1049,27 +1018,12 @@ def streaming_lexical_ingest(
         )
         fresh_post = fresh_post.localCheckpoint(eager=True)
         fresh_len = fresh_len.localCheckpoint(eager=True)
-        resent = resent.localCheckpoint(eager=True)
-        fresh_post.write.mode("overwrite").parquet(
-            f"{postings_path}/batch_id={batch_id}"
-        )
-        fresh_len.write.mode("overwrite").parquet(
-            f"{doclen_path}/batch_id={batch_id}"
-        )
         # a changed re-send re-emits BOTH its postings and its doclen
         # row, so the same id set is multi-version in both stores
-        _write_multiversion_manifest(
-            resent, postings_path, batch_id, id_col
-        )
-        _write_multiversion_manifest(resent, doclen_path, batch_id, id_col)
+        _append_store_batch(fresh_post, resent, postings_path, batch_id, id_col)
+        _append_store_batch(fresh_len, resent, doclen_path, batch_id, id_col)
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .start()
-    )
+    return _start_sink(docs, sink, checkpoint, query_name)
 
 
 def user_value_stats_tws(events: DataFrame) -> DataFrame:

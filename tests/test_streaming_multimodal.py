@@ -1414,6 +1414,66 @@ def test_streaming_lexical_ingest_search_equals_batch(spark, tmp_path):
     assert got == want and len(got) == 3
 
 
+@pytest.mark.parametrize(
+    "sink_name, per_batch", [("near_dup", 4), ("lexical", 5)]
+)
+def test_near_dup_ingest_lexical_ingest_checkpoint_count(
+    spark, tmp_path, monkeypatch, sink_name, per_batch
+):
+    """Each micro-batch materializes a fixed number of frames, so the
+    sinks re-checkpoint nothing their delta operator already stored.
+    Near-dup: shingle sets, band rows, changed ids, appended rows.
+    Lexical: delta postings and doclen, changed ids, the two appended
+    frames. The third batch carries an identical and a changed
+    re-send."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from chicago_crime_spark_ml_spark import streaming
+
+    calls = []
+    real = DataFrame.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    batches = [
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        [(2, "a completely unrelated line of text"), (3, "spark plans")],
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "a changed line of text about nothing"),
+            (4, "the quick brown fox jumps over the lazy cat"),
+        ],
+    ]
+    schema = "doc_id BIGINT, text STRING"
+    src = tmp_path / "src"
+    src.mkdir()
+    stream = spark.readStream.schema(schema).parquet(str(src))
+    ckpt = str(tmp_path / "ckpt")
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    if sink_name == "near_dup":
+        q = streaming.streaming_near_dup_ingest(
+            stream, str(tmp_path / "idx"), str(tmp_path / "pairs"), ckpt
+        )
+    else:
+        q = streaming.streaming_lexical_ingest(
+            stream, str(tmp_path / "post"), str(tmp_path / "len"), ckpt
+        )
+    counts = []
+    try:
+        for rows in batches:
+            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+                str(src), mode="append"
+            )
+            q.processAllAvailable()
+            counts.append(len(calls))
+            calls.clear()
+    finally:
+        q.stop()
+    assert counts == [per_batch] * 3
+
+
 def test_streaming_cluster_maintenance_equals_batch(spark, tmp_path):
     """The streaming cluster capstone: after two micro-batches (with a
     cross-batch near-dup and a re-sent doc) the labels store equals a

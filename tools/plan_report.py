@@ -111,9 +111,12 @@ def main(sf_dir: str) -> None:
         "# PLANS — physical-plan ledger (generated by tools/plan_report.py)",
         "",
         f"Catalog: {len(rows)} queries analyzed at `{sf_dir}` "
-        "(plan analysis only — never executed). Broadcast/shuffle join "
-        "split is the ANALYZED plan; AQE may upgrade shuffle→broadcast at "
-        "runtime when the built side turns out small.",
+        "(plans are not executed, except that the delta-family queries "
+        "run their eager materialization jobs while capture builds them; "
+        "their exchange counts exclude the checkpointed subtrees). "
+        "Broadcast/shuffle join split is the ANALYZED plan; AQE may "
+        "upgrade shuffle→broadcast at runtime when the built side turns "
+        "out small.",
         "",
         f"Totals: {totals['exchanges']} exchanges across the catalog, "
         f"{totals['python_boundaries']} Arrow-batched Python boundaries "
