@@ -6,19 +6,26 @@ the codebase (maxResultSize=4g exists only to survive that collect). Here
 training is distributed end-to-end: indexers + VectorAssembler + a
 cluster-native trainer, class weights computed as a DataFrame job and fed
 via weightCol, evaluation via MulticlassClassificationEvaluator. Serving
-reuses the SAME fitted PipelineModel on a 1-row DataFrame — no NumPy twin.
+reuses the SAME fitted PipelineModel — no NumPy twin: ``compile_scorer``
+runs its fitted stages in-process (dict lookups, vector assembly, one
+in-JVM ``predict`` call, no Spark job), and ``predict_single`` — the
+pipeline's transform on a 1-row DataFrame — stays as the Spark reference
+and as the fallback for stages with no exact in-process form.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Mapping, Sequence
 from dataclasses import dataclass
 
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.evaluation import MulticlassClassificationEvaluator
-from pyspark.ml.feature import StringIndexer, VectorAssembler
+from pyspark.ml.feature import StringIndexer, StringIndexerModel, VectorAssembler
+from pyspark.ml.linalg import DenseVector, SparseVector, Vector
+from pyspark.ml.wrapper import JavaPredictionModel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -280,6 +287,145 @@ def predict_single(model: PipelineModel, spark, row: dict) -> DataFrame:
     reference's hand-rolled NumPy re-implementation of its own feature
     pipeline (/root/reference/Stramlit_app.py:123-136)."""
     return model.transform(spark.createDataFrame([row]))
+
+
+class _NotInProcess(Exception):
+    """A request value whose Spark cast the in-process scorer does not
+    mirror; that request is served by ``predict_single`` instead."""
+
+
+def _index_fn(labels: Sequence[str], keep: bool) -> Callable:
+    """One column of a fitted StringIndexerModel: the label's position,
+    ``len(labels)`` for a null or unseen label under handleInvalid='keep'."""
+    index = {label: float(i) for i, label in enumerate(labels)}
+
+    def fn(v):
+        if v is not None and not isinstance(v, str):
+            # Spark casts to string first, and its cast is not str()
+            # (True -> "true", 1e20 -> "1.0E20")
+            raise _NotInProcess
+        if v in index:
+            return index[v]
+        if keep:
+            return float(len(labels))
+        raise ValueError(
+            f"StringIndexer: null or unseen label {v!r} with handleInvalid='error'"
+        )
+
+    return fn
+
+
+def _assemble_fn(keep: bool) -> Callable:
+    """VectorAssembler on one row, as Spark's ``assemble`` does it:
+    numeric and bool inputs fill one slot, vectors their size, a null
+    scalar is NaN under handleInvalid='keep'; zeros are dropped and the
+    result is compressed (``Vector.compressed``), so the predictor sees
+    the same dense-or-sparse vector as in the batch transform."""
+
+    def fn(*inputs):
+        idx, vals, size = [], [], 0
+        for v in inputs:
+            if isinstance(v, Vector):
+                active = (
+                    zip(v.indices, v.values)
+                    if isinstance(v, SparseVector)
+                    else enumerate(v.toArray())
+                )
+                width = v.size
+            elif v is None or isinstance(v, (int, float)):  # bool is an int
+                x = math.nan if v is None else float(v)
+                if math.isnan(x) and not keep:
+                    raise ValueError(
+                        "VectorAssembler: null or NaN input with handleInvalid='error'"
+                    )
+                active, width = [(0, x)], 1
+            else:
+                raise _NotInProcess
+            for i, x in active:
+                if x != 0.0:
+                    idx.append(size + int(i))
+                    vals.append(float(x))
+            size += width
+        vec = SparseVector(size, idx, vals)
+        return vec if 1.5 * (len(vals) + 1.0) < size else DenseVector(vec.toArray())
+
+    return fn
+
+
+def _in_process_plan(model: PipelineModel):
+    """The fitted stages the prediction reads, as (out_col, in_cols, fn,
+    skip_if_absent) steps plus the predictor — or None when a stage has
+    no exact in-process form (a scaler, a Python-side model such as
+    SparkXGBClassifierModel, handleInvalid='skip', which drops the row,
+    a multi-column indexer)."""
+    *head, predictor = model.stages
+    if not isinstance(predictor, JavaPredictionModel):
+        return None
+    steps = []
+    for stage in head:
+        if not isinstance(stage, (StringIndexerModel, VectorAssembler)):
+            return None
+        if stage.getHandleInvalid() == "skip":
+            return None
+        keep = stage.getHandleInvalid() == "keep"
+        if isinstance(stage, VectorAssembler):
+            steps.append((stage.getOutputCol(), tuple(stage.getInputCols()),
+                          _assemble_fn(keep), False))
+        elif stage.isSet("inputCols"):
+            return None
+        else:  # Spark skips an indexer whose column the request lacks
+            steps.append((stage.getOutputCol(), (stage.getInputCol(),),
+                          _index_fn(stage.labels, keep), True))
+    # Catalyst prunes the columns ``prediction`` does not read (an unused
+    # 'error' indexer never sees the row), so skip those steps too
+    needed, kept = {predictor.getFeaturesCol()}, []
+    for step in reversed(steps):
+        if step[0] in needed:
+            kept.insert(0, step)
+            needed.update(step[1])
+    return kept, predictor
+
+
+def compile_scorer(model: PipelineModel) -> Callable[..., float]:
+    """Compile a fitted PipelineModel once into ``score(spark, row) ->
+    prediction`` that runs the SAME fitted stage objects in-process:
+    StringIndexerModel as a dict built from its labels, VectorAssembler
+    as Python vector assembly, and the final PredictionModel's in-JVM
+    ``predict(Vector)`` — a Py4J call, not a Spark job. The result equals
+    the batch transform's ``prediction`` for the same row, handleInvalid
+    included ('keep' → the extra bucket / NaN, 'error' raises), and a
+    null field scores as a null in the typed column does (a None that
+    ``predict_single``'s ``createDataFrame`` cannot type).
+
+    A pipeline with any other stage is served by ``predict_single`` on
+    every row (decided here, once); so is a single request whose value
+    needs a Spark cast the scorer does not mirror (a non-string value for
+    an indexed column)."""
+    def reference(spark, row: Mapping[str, object]) -> float:
+        return predict_single(model, spark, dict(row)).select("prediction").first()[0]
+
+    plan = _in_process_plan(model)
+    if plan is None:
+        return reference
+    steps, predictor = plan
+    features_col, n_features = predictor.getFeaturesCol(), predictor.numFeatures
+
+    def score(spark, row: Mapping[str, object]) -> float:
+        values = dict(row)
+        try:
+            for out, ins, fn, skip_if_absent in steps:
+                if not (skip_if_absent and ins[0] not in values):
+                    values[out] = fn(*(values[c] for c in ins))
+            vec = values[features_col]
+            # a null vector input under 'keep' has a width only Spark's
+            # column metadata knows
+            if not isinstance(vec, Vector) or vec.size != n_features:
+                raise _NotInProcess
+        except _NotInProcess:
+            return reference(spark, row)
+        return predictor.predict(vec)
+
+    return score
 
 
 def hash_split(

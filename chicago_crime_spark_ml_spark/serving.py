@@ -13,11 +13,16 @@ features (district/beat/community crime counts) into number inputs
   lookup. Served value ≡ train-time join value — asserted in tests.
 - ``ServingBundle``: fitted PipelineModel + label maps + feature store;
   ``predict_row`` assembles a user-facing request (raw keys only, no
-  typed-in densities) into the model's full feature row and runs it
-  through the SAME fitted pipeline — no NumPy twin to drift.
+  typed-in densities) into the model's full feature row and runs the
+  SAME fitted pipeline's stages in-process (``ml.compile_scorer``,
+  compiled once per bundle) — no NumPy twin to drift, and no Spark job.
+  ``ml.predict_single`` (the transform on a 1-row DataFrame) is the
+  Spark reference it is tested against and the fallback for a pipeline
+  with a stage that has no exact in-process form.
 
 Driver-side lookups are dicts, not Spark jobs: a single-row predict
-should never launch a cluster job for features. The store is bounded by
+never launches a cluster job, for features or for the model (only a
+pipeline on the fallback path still does). The store is bounded by
 construction (density keys are bounded-domain columns — the reference's
 District/Beat/Community Area); ``build`` raises if a key column's
 cardinality says otherwise, which is the signal to serve that column
@@ -28,7 +33,7 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.ml import PipelineModel
@@ -120,10 +125,18 @@ class ServingBundle:
     model: PipelineModel
     mappings: dict[str, list[str]]
     store: FeatureStore
+    _score: Callable = field(init=False, repr=False, compare=False)
 
     MODEL_DIR = "pipeline_model"
     MAPPINGS_FILE = "indexer_mappings.json"
     STORE_FILE = "feature_store.json"
+
+    def __post_init__(self) -> None:
+        from chicago_crime_spark_ml_spark.operators.ml import (  # noqa: PLC0415
+            compile_scorer,
+        )
+
+        self._score = compile_scorer(self.model)
 
     @classmethod
     def save_parts(
@@ -161,16 +174,18 @@ class ServingBundle:
         density_keys: Sequence[str] = (),
     ) -> dict:
         """Single-row inference: serve density features from the store,
-        assemble the full feature row, run the SAME fitted pipeline
-        (ml.predict_single), return prediction + label. The caller sends
+        assemble the full feature row, run the SAME fitted pipeline's
+        stages in-process (ml.compile_scorer; no Spark job), return
+        prediction + label. The prediction equals ml.predict_single's,
+        which serves the pipelines the scorer cannot. The caller sends
         only raw request fields — no hand-typed counts, no NumPy
-        re-implementation of the pipeline."""
+        re-implementation of the pipeline. A null field is served as
+        the batch transform serves a null in a typed column."""
         full = dict(row)
         full.update(
             self.store.features_for({k: row[k] for k in density_keys})
         )
-        out = self.model.transform(spark.createDataFrame([full]))
-        pred = out.select("prediction").first()[0]
+        pred = self._score(spark, full)
         labels = self.mappings.get("label_labels")
         return {
             "prediction": float(pred),

@@ -6,7 +6,8 @@ every stage through the engine's operators:
   temporal / cyclical / distance / weekend features → Crime_Category
   CASE → time split (≤2003 / 2004) → leakage-safe count features →
   StringIndexer + JSON mapping export → distributed class weights →
-  train_multiclass → eval → single-row serving via the same pipeline.
+  train_multiclass → eval → single-row serving via the same fitted
+  stages, run in-process.
 
 Assertions are the structural invariants the reference only eyeballed:
 row conservation through each stage, no NULLs in the feature matrix,
@@ -151,7 +152,8 @@ def pipeline_result(spark, tmp_path_factory):
     )
     return dict(
         raw=raw, clean=clean, good=good, bad=bad, train=train, test=test,
-        train_i=train_i, test_i=test_i, mappings=mappings, result=result,
+        train_i=train_i, test_i=test_i, idx_model=idx_model,
+        mappings=mappings, result=result,
         feature_cols=feature_cols,
     )
 
@@ -214,13 +216,76 @@ def test_model_beats_majority_baseline(pipeline_result):
     )
 
 
-def test_single_row_serving_matches_batch(pipeline_result, spark):
-    from chicago_crime_spark_ml_spark.operators.ml import predict_single
+@pytest.fixture(scope="module")
+def serving_model(pipeline_result):
+    """The served pipeline over RAW rows: the location indexer, then the
+    trained label indexer, assembler and classifier."""
+    from pyspark.ml import PipelineModel
 
     r = pipeline_result
-    row = r["test_i"].limit(1)
-    batch_pred = r["result"].model.transform(row).select("prediction").first()[0]
-    served = predict_single(
-        r["result"].model, spark, row.drop("features").first().asDict()
-    ).select("prediction").first()[0]
-    assert served == batch_pred
+    return PipelineModel(
+        stages=[*r["idx_model"].stages, *r["result"].model.stages]
+    )
+
+
+@pytest.fixture(scope="module")
+def served_bundle(pipeline_result, serving_model, tmp_path_factory):
+    from chicago_crime_spark_ml_spark.serving import FeatureStore, ServingBundle
+
+    r = pipeline_result
+    path = str(tmp_path_factory.mktemp("bundle"))
+    mappings = {**r["mappings"], "label_labels": r["result"].label_mapping}
+    ServingBundle.save_parts(path, serving_model, mappings, FeatureStore(tables={}))
+    return ServingBundle.load(path)
+
+
+def test_single_row_serving_matches_batch(pipeline_result, serving_model, spark):
+    # every held-out row, one with a Location Description the indexer
+    # never saw, and one without the label column: each served row
+    # predicts exactly what the batch transform predicts for it
+    from chicago_crime_spark_ml_spark.operators.ml import compile_scorer
+
+    test = pipeline_result["test"]
+    one = test.orderBy("ID").limit(1)
+    score = compile_scorer(serving_model)
+    served, batch = [], []
+    for df in (
+        test,
+        one.withColumn("Location Description", F.lit("LAGOON")),
+        one.drop("Crime_Category"),
+    ):
+        for r in serving_model.transform(df).orderBy("ID").collect():
+            served.append(score(spark, {c: r[c] for c in df.columns}))
+            batch.append(r["prediction"])
+    assert len(served) == test.count() + 2
+    assert served == batch
+
+
+def test_predict_row_null_field_matches_batch(pipeline_result, served_bundle, spark):
+    # a request with a null field: createDataFrame([row]) cannot type it,
+    # while the batch transform over the typed column sends the null to
+    # the indexer's keep bucket; the served row predicts the same
+    one = (
+        pipeline_result["test"].orderBy("ID").limit(1)
+        .withColumn("Location Description", F.lit(None).cast("string"))
+    )
+    scored = served_bundle.model.transform(one).first()
+    assert scored["Location Description_idx"] == len(
+        pipeline_result["mappings"]["Location Description"]
+    )
+    request = {c: scored[c] for c in one.columns}
+    out = served_bundle.predict_row(spark, request)
+    assert out["prediction"] == scored["prediction"]
+
+
+def test_predict_row_runs_no_spark_job(pipeline_result, served_bundle, spark):
+    sc = spark.sparkContext
+    rows = pipeline_result["test"].orderBy("ID").limit(3).collect()
+    sc.setJobGroup("serve", "single-row predict_row")
+    try:
+        for r in rows:
+            served_bundle.predict_row(spark, r.asDict())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("serve") == []

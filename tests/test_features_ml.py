@@ -137,6 +137,7 @@ def test_train_eval_serving_parity(spark, sf_dir):
     from pyspark.ml.functions import array_to_vector
 
     from chicago_crime_spark_ml_spark.operators.ml import (
+        compile_scorer,
         predict_single,
         train_multiclass,
     )
@@ -164,14 +165,16 @@ def test_train_eval_serving_parity(spark, sf_dir):
         for b in res.model.transform(test).select("vec_id", "prediction").collect()
     }
     sample = test.select("vec_id", "features_arr", "label_str").limit(3).collect()
+    score = compile_scorer(res.model)
     for r in sample:
-        served = predict_single(
-            res.model,
-            spark,
-            {"features_arr": r.features_arr, "label_str": r.label_str},
-        ).select("prediction").collect()[0][0]
+        request = {"features_arr": r.features_arr, "label_str": r.label_str}
+        served = predict_single(res.model, spark, request).select(
+            "prediction"
+        ).collect()[0][0]
         assert r.vec_id in batch
         assert served == batch[r.vec_id]
+        # the in-process scorer on the Vector-typed input
+        assert score(spark, request) == batch[r.vec_id]
 
 
 def test_model_save_load_roundtrip(spark, sf_dir, tmp_path):

@@ -318,6 +318,29 @@ def test_serving_bundle_round_trip_and_predict(spark, sf_dir, tmp_path):
     )
     assert out["prediction"] == batch_pred
 
+    # a stage with no in-process form (a scaler) serves every row through
+    # the Spark fallback, still equal to the batch transform
+    from pyspark.ml import Pipeline
+    from pyspark.ml.classification import RandomForestClassifier
+    from pyspark.ml.feature import StandardScaler, StringIndexer, VectorAssembler
+
+    scaled = Pipeline(stages=[
+        StringIndexer(inputCol="lang", outputCol="label", handleInvalid="keep"),
+        VectorAssembler(inputCols=feature_cols, outputCol="raw"),
+        StandardScaler(inputCol="raw", outputCol="features"),
+        RandomForestClassifier(numTrees=5, maxDepth=4, seed=42),
+    ]).fit(train)
+    scaled_bundle = ServingBundle(
+        model=scaled, mappings={"label_labels": result.label_mapping}, store=store
+    )
+    out = scaled_bundle.predict_row(spark, probe, density_keys=["source"])
+    batch_pred = (
+        scaled.transform(spark.createDataFrame([batch_row]))
+        .select("prediction")
+        .first()[0]
+    )
+    assert out["prediction"] == batch_pred
+
 
 # ---------------------------------------------------------------------------
 # model sidecar interop
