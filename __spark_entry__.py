@@ -130,6 +130,14 @@ _REWRITTEN_GREENS = [
     # earned green r13 rows on the new impls and dropped; the r13-opt /
     # r14 optimization-rewritten paths below have no driver row on the
     # code that now ships: VERDICT r13 #5 requires fronting them)
+    # the certs moved onto the shared scratch-store / stream-replay /
+    # frame-equality helpers in queries.py (the streaming_* and *_check
+    # names below are certs too)
+    "ivf_compaction_check",
+    "ivf_compact_replace_check",
+    "streaming_ivf_span_check",
+    "cc_labels_upsert_check",
+    "cc_incremental_check",
     # the delta-index family moved onto one shared re-send classifier
     # and cell probe (operators/incremental.py) and one sink scaffold
     # (streaming/__init__.py); bm25_incremental_search and

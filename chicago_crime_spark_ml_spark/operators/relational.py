@@ -7,7 +7,6 @@ declarative. Scale notes per operator where they matter.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Mapping, Sequence
 from functools import reduce
 
@@ -884,8 +883,7 @@ def _range_partitioned_with_pid(
     bounds in a separate job over the child plan, so a lazy input's
     lineage runs twice — once for the sample, once for the shuffle) is
     handled in ``_materialized_range_partitioned``, which keeps the
-    input lazy by default and offers an env-gated eager option for
-    genuinely expensive lineages — see its docstring. r13-opt instead
+    input lazy — see its docstring. r13-opt instead
     unconditionally ``localCheckpoint``-ed the input here, which added
     a whole extra materialization job per call, ran Spark jobs at
     plan-construction time (breaking the analysis-only contract of
@@ -909,22 +907,16 @@ def _materialized_range_partitioned(
     re-sample different bounds — see global_rank's docstring for the
     cluster caveats).
 
-    The INPUT is lazy by default — the r14 revert of the r13 eager
-    input-localCheckpoint, which added a whole materialization job per
-    call, leaked session-lifetime checkpoint blocks, ran Spark jobs at
+    The INPUT stays lazy, so RangePartitioner's bounds-sampling job
+    re-runs the input lineage: one extra pass over the rollup's fact
+    scan. Checkpointing the input first (r13) would sample a stored
+    frame instead, but costs a whole materialization job per call,
+    leaks session-lifetime checkpoint blocks, runs Spark jobs at
     plan-construction time, and lost on the driver bench
-    (customer_revenue_global_rank 0.835→1.325 s, PERF_r13; an
-    input-``persist`` alternative measured even worse here — +1.0 s —
-    because cached subplans execute without AQE partition coalescing,
-    so the rollup materializes at full shuffle-partition width).
-    RangePartitioner's bounds-sampling job does re-run the input
-    lineage (one extra pass over the rollup's fact scan); on a real
-    cluster where that lineage is a 100 TB fact pass, set
-    ``SPARK_GRAFT_RANK_EAGER_INPUT=1`` to materialize the rollup once
-    and sample the stored frame instead — the r13 trade, now opt-in
-    with the bench-scale default being the measured winner."""
-    if os.environ.get("SPARK_GRAFT_RANK_EAGER_INPUT", "") == "1":
-        df = df.localCheckpoint(eager=True)
+    (customer_revenue_global_rank 0.835→1.325 s, PERF_r13). An
+    input-``persist`` measured even worse here (+1.0 s): cached
+    subplans execute without AQE partition coalescing, so the rollup
+    materializes at full shuffle-partition width."""
     return _range_partitioned_with_pid(df, cols, n).localCheckpoint(
         eager=True
     )

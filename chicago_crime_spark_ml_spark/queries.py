@@ -15,7 +15,11 @@ columns are bit-identical and stay unrounded.
 
 from __future__ import annotations
 
+import glob
 import math
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -2140,10 +2144,6 @@ def streaming_cluster_maintenance_check(
     rescore, incremental CC, and the parquet upsert. Scratch stores
     live in a driver tempdir, removed before returning (the result is
     materialized first)."""
-    import glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from chicago_crime_spark_ml_spark.streaming import (
         streaming_cluster_maintenance,
@@ -2178,37 +2178,23 @@ def streaming_cluster_maintenance_check(
         # b2: late arrivals whose pairs reach back to stored texts
         s.filter(is_z),
     )
-    root = tempfile.mkdtemp(prefix="stream_cc_")
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    try:
-        # one file per batch, strictly increasing mtimes: the parquet
-        # file source orders by modification time, so the replayed
-        # sequence is exactly b0 -> b1 -> b2
+    with tempfile.TemporaryDirectory(
+        prefix="stream_cc_", ignore_cleanup_errors=True
+    ) as root:
+        src = os.path.join(root, "src")
+        os.makedirs(src)
+        # one file per batch: the replayed sequence is b0 -> b1 -> b2
         for i, frame in enumerate(batches):
-            stage = os.path.join(root, f"stage{i}")
-            frame.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            dst = os.path.join(src, f"b{i}.parquet")
-            shutil.copyfile(part, dst)
-            t = 1_600_000_000 + i * 1_000
-            os.utime(dst, (t, t))
-        stream = (
-            spark.readStream.schema("doc_id BIGINT, text STRING")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+            _stage_span_batch(root, src, i, frame)
+        _drain_stream(
+            streaming_cluster_maintenance(
+                _replay_stream(spark, src, "doc_id BIGINT, text STRING"),
+                os.path.join(root, "index"),
+                os.path.join(root, "docs"),
+                os.path.join(root, "labels"),
+                os.path.join(root, "ckpt"),
+            )
         )
-        q = streaming_cluster_maintenance(
-            stream,
-            os.path.join(root, "index"),
-            os.path.join(root, "docs"),
-            os.path.join(root, "labels"),
-            os.path.join(root, "ckpt"),
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         labels = spark.read.parquet(os.path.join(root, "labels")).select(
             "node", "label"
         )
@@ -2220,8 +2206,6 @@ def streaming_cluster_maintenance_check(
             )
             .localCheckpoint(eager=True)  # materialize before rmtree
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return out
 
 
@@ -2298,9 +2282,6 @@ def lsh_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     ngram_jaccard_near_dups' exact closed form UNCHANGED (banding
     32×2: per-pair miss ≤ 6.3e-15 at J ≥ 0.8, the certified recall
     contract)."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from chicago_crime_spark_ml_spark.operators.dedup import (
         lsh_band_index,
@@ -2321,9 +2302,10 @@ def lsh_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("text")),
     )
     resend = d.filter(changed)
-    root = tempfile.mkdtemp(prefix="lsh_compact_")
-    idx_path = os.path.join(root, "bands")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="lsh_compact_", ignore_cleanup_errors=True
+    ) as root:
+        idx_path = os.path.join(root, "bands")
         lsh_band_index(poisoned, num_hashes=32, band_width=2).write.mode(
             "overwrite"
         ).parquet(f"{idx_path}/batch_id=0")
@@ -2337,27 +2319,16 @@ def lsh_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_ingest_index(spark, idx_path, replace_latest_by="doc_id")
         idx = spark.read.parquet(idx_path).drop("batch_id")
         want = lsh_band_index(d, num_hashes=32, band_width=2)
-        if idx.exceptAll(want).count() + want.exceptAll(idx).count() != 0:
+        if not _same_rows(idx, want):
             raise AssertionError(
                 "replace-compacted band store must equal a rebuild over "
                 "the latest contents"
             )
         idx = idx.localCheckpoint(eager=True)  # survive the rmtree
-        cand = (
-            idx.select("band", "bucket", F.col("doc_id").alias("id_a"))
-            .join(
-                idx.select("band", "bucket", F.col("doc_id").alias("id_b")),
-                ["band", "bucket"],
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
+        cand = _cell_pairs(idx, ["band", "bucket"])
         out = rescore_jaccard(cand, d, threshold=0.8).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return out
 
 
@@ -3693,9 +3664,6 @@ def lexical_compact_replace_check(
     Layout side-contracts raise in-query: the doclen store must hold
     duplicate ids BEFORE compaction, exactly one row per doc and one
     batch directory AFTER."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from chicago_crime_spark_ml_spark.operators.text import (
         bm25_search_from_index,
@@ -3715,10 +3683,11 @@ def lexical_compact_replace_check(
         ).otherwise(F.col("text")),
     )
     resend = d.filter(changed)
-    root = tempfile.mkdtemp(prefix="lex_compact_")
-    post_path = os.path.join(root, "postings")
-    dlen_path = os.path.join(root, "doclen")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="lex_compact_", ignore_cleanup_errors=True
+    ) as root:
+        post_path = os.path.join(root, "postings")
+        dlen_path = os.path.join(root, "doclen")
         p0, l0 = lexical_index(poisoned)
         p0.write.mode("overwrite").parquet(f"{post_path}/batch_id=0")
         l0.write.mode("overwrite").parquet(f"{dlen_path}/batch_id=0")
@@ -3736,12 +3705,9 @@ def lexical_compact_replace_check(
             )
         for pth in (post_path, dlen_path):
             compact_ingest_index(spark, pth, replace_latest_by="doc_id")
-        batch_dirs = [
-            x for x in os.listdir(dlen_path) if x.startswith("batch_id=")
-        ]
         if (
             spark.read.parquet(dlen_path).count() != n_docs
-            or len(batch_dirs) != 1
+            or len(_partition_dirs(dlen_path, "batch_id=")) != 1
         ):
             raise AssertionError(
                 "replace-compaction must keep exactly the latest row per "
@@ -3753,8 +3719,6 @@ def lexical_compact_replace_check(
             ["spark", "table", "window"],
             k=10,
         ).localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return out
 
 
@@ -3765,7 +3729,7 @@ def streaming_lexical_ingest_check(
     """STREAMING lexical ingest under the oracle gate (r11, VERDICT
     r10 #5 — previously pytest-only): the documents table is fed
     through a REAL Structured Streaming foreachBatch run in three
-    micro-batches (maxFilesPerTrigger=1 over a 3-file staging copy),
+    micro-batches (one file per trigger over a 3-file staging copy),
     each batch tokenizing only its own docs and appending to the
     ``batch_id=N`` postings/doclen stores (streaming_lexical_ingest →
     lexical_index_delta). BM25 then runs entirely from the maintained
@@ -3778,10 +3742,6 @@ def streaming_lexical_ingest_check(
     data file count strictly dropped, and the identical search
     returns IDENTICAL rows from the compacted store. Scratch stores
     live in a driver tempdir, removed before returning."""
-    import glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from chicago_crime_spark_ml_spark.operators.text import (
         bm25_search_from_index,
@@ -3794,25 +3754,22 @@ def streaming_lexical_ingest_check(
     )
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="stream_lex_")
-    src = os.path.join(root, "src")
-    post_path = os.path.join(root, "postings")
-    dlen_path = os.path.join(root, "doclen")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_lex_", ignore_cleanup_errors=True
+    ) as root:
+        src = os.path.join(root, "src")
+        post_path = os.path.join(root, "postings")
+        dlen_path = os.path.join(root, "doclen")
         # stage the corpus as 3 files -> 3 micro-batches
         d.repartition(3).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema("doc_id BIGINT, text STRING")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        _drain_stream(
+            streaming_lexical_ingest(
+                _replay_stream(spark, src, "doc_id BIGINT, text STRING"),
+                post_path,
+                dlen_path,
+                os.path.join(root, "ckpt"),
+            )
         )
-        q = streaming_lexical_ingest(
-            stream, post_path, dlen_path, os.path.join(root, "ckpt")
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
         def search() -> DataFrame:
             return bm25_search_from_index(
@@ -3823,9 +3780,7 @@ def streaming_lexical_ingest_check(
             )
 
         before = [(r.doc_id, r.bm25) for r in search().collect()]
-        dirs_before = [
-            x for x in os.listdir(post_path) if x.startswith("batch_id=")
-        ]
+        dirs_before = _partition_dirs(post_path, "batch_id=")
         files_before = len(
             glob.glob(os.path.join(post_path, "batch_id=*", "part-*"))
         )
@@ -3837,9 +3792,7 @@ def streaming_lexical_ingest_check(
             compact_ingest_index(
                 spark, pth, verify_single_version_by="doc_id"
             )
-        dirs_after = [
-            x for x in os.listdir(post_path) if x.startswith("batch_id=")
-        ]
+        dirs_after = _partition_dirs(post_path, "batch_id=")
         files_after = len(
             glob.glob(os.path.join(post_path, "batch_id=*", "part-*"))
         )
@@ -3857,25 +3810,21 @@ def streaming_lexical_ingest_check(
             raise AssertionError(
                 "compaction must not change search results"
             )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return out
 
 
-# Shared harness of the four stream-spans-a-compaction certs (r13
-# review: previously copy-pasted per cert — a fix to the staging/mtime
-# or layout-assert logic had to land in four places or the certs
-# silently drifted apart).
+# Shared harness of the certification queries (the *_check certs and
+# the stream-spans-a-compaction family): scratch stores live in a
+# ``tempfile.TemporaryDirectory`` per cert, and staging, replay,
+# frame equality, the reference index consumers and layout probes are
+# the helpers below — one copy each, so a fix lands once and the certs
+# cannot silently drift apart.
 
 
 def _stage_span_batch(root: str, src: str, i: int, frame: DataFrame) -> None:
     """Stage micro-batch ``i`` as a single parquet file in the stream
-    source directory with a strictly increasing mtime, so the file
-    source's ``maxFilesPerTrigger=1`` delivers the batches in order."""
-    import glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
+    source directory with a strictly increasing mtime, so the replay
+    source (one file per trigger) delivers the batches in order."""
     tmp = os.path.join(root, f"stage{i}")
     frame.coalesce(1).write.mode("overwrite").parquet(tmp)
     part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
@@ -3885,13 +3834,63 @@ def _stage_span_batch(root: str, src: str, i: int, frame: DataFrame) -> None:
     os.utime(dst, (t, t))
 
 
+def _replay_stream(spark: SparkSession, src: str, schema: str) -> DataFrame:
+    """Replay the files staged in ``src`` as a parquet file stream, one
+    file per micro-batch in modification-time order."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
 def _drain_stream(q) -> None:
     """Run a StreamingQuery until every staged file is processed, then
-    stop it — the span certs' stop-the-stream maintenance boundary."""
+    stop it — the certs' stop-the-stream maintenance boundary."""
     try:
         q.processAllAvailable()
     finally:
         q.stop()
+
+
+def _same_rows(a: DataFrame, b: DataFrame) -> bool:
+    """Multiset equality of two frames with the same column layout:
+    ``exceptAll`` both ways (duplicates count, unlike ``subtract``),
+    decided by ONE action over the union of the two differences."""
+    return a.exceptAll(b).union(b.exceptAll(a)).isEmpty()
+
+
+def _cell_pairs(idx: DataFrame, cells: list[str]) -> DataFrame:
+    """Distinct ``id_a < id_b`` doc pairs sharing a ``cells`` key in the
+    (doc_id, *cells) index — the reference side of the index checks,
+    deliberately independent of incremental.delta_cell_pairs (the code
+    under test)."""
+    return (
+        idx.select(*cells, F.col("doc_id").alias("id_a"))
+        .join(idx.select(*cells, F.col("doc_id").alias("id_b")), cells)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+def _shared_frame_pairs(idx: DataFrame) -> DataFrame:
+    """The containment consumer of a (doc_id, dhash) frame store: doc
+    pairs sharing at least 4 distinct frame hashes, with the count."""
+    a = idx.select(F.col("doc_id").alias("id_a"), "dhash")
+    b = idx.select(F.col("doc_id").alias("id_b"), "dhash")
+    return (
+        a.join(b, "dhash")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).cast("int").alias("shared_frames"))
+        .filter(F.col("shared_frames") >= 4)
+    )
+
+
+def _partition_dirs(path: str, prefix: str) -> list[str]:
+    """Entries of ``path`` named ``prefix...`` (e.g. ``batch_id=``)."""
+    return [x for x in os.listdir(path) if x.startswith(prefix)]
 
 
 def _assert_span_phase(
@@ -3906,8 +3905,6 @@ def _assert_span_phase(
     and a non-empty ``_mv`` manifest; ``multi=False`` → exactly
     ``n_rows`` latest-only rows under the single reserved
     ``batch_id=-1`` partition with the manifest retired by the swap."""
-    import os  # noqa: PLC0415
-
     n = spark.read.parquet(store_path).count()
     mv_dir = os.path.join(store_path, "_mv")
     mv_rows = (
@@ -3923,12 +3920,7 @@ def _assert_span_phase(
     if not multi and not (
         n == n_rows
         and mv_rows is None
-        and [
-            x
-            for x in os.listdir(store_path)
-            if x.startswith("batch_id=")
-        ]
-        == ["batch_id=-1"]
+        and _partition_dirs(store_path, "batch_id=") == ["batch_id=-1"]
     ):
         raise AssertionError(
             f"{label}: expected latest-only rows under batch_id=-1 "
@@ -3973,9 +3965,6 @@ def streaming_compaction_span_check(
     return the identical rows. In-query raises pin the layout at each
     phase: duplicates + non-empty manifest before each compaction,
     exactly one ``batch_id=-1`` directory and NO manifest after."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from chicago_crime_spark_ml_spark.operators.text import (
         bm25_search_from_index,
@@ -4010,27 +3999,28 @@ def streaming_compaction_span_check(
         d.filter(is7),       # b1: %7 re-sent true (pre-compaction)
         d.filter(is11),      # b2: %11 re-sent true (post-compaction)
     )
-    root = tempfile.mkdtemp(prefix="stream_span_")
-    src = os.path.join(root, "src")
-    post_path = os.path.join(root, "postings")
-    dlen_path = os.path.join(root, "doclen")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(src)
+    with tempfile.TemporaryDirectory(
+        prefix="stream_span_", ignore_cleanup_errors=True
+    ) as root:
+        src = os.path.join(root, "src")
+        post_path = os.path.join(root, "postings")
+        dlen_path = os.path.join(root, "doclen")
+        ckpt = os.path.join(root, "ckpt")
+        os.makedirs(src)
 
-    def run_stream() -> None:
-        stream = (
-            spark.readStream.schema("doc_id BIGINT, text STRING")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        _drain_stream(
-            streaming_lexical_ingest(stream, post_path, dlen_path, ckpt)
-        )
+        def run_stream() -> None:
+            _drain_stream(
+                streaming_lexical_ingest(
+                    _replay_stream(spark, src, "doc_id BIGINT, text STRING"),
+                    post_path,
+                    dlen_path,
+                    ckpt,
+                )
+            )
 
-    def phase(n_docs: int, multi: bool, label: str) -> None:
-        _assert_span_phase(spark, dlen_path, n_docs, multi, label)
+        def phase(n_docs: int, multi: bool, label: str) -> None:
+            _assert_span_phase(spark, dlen_path, n_docs, multi, label)
 
-    try:
         n_docs = d.count()
         _stage_span_batch(root, src, 0, batches[0])
         _stage_span_batch(root, src, 1, batches[1])
@@ -4077,8 +4067,6 @@ def streaming_compaction_span_check(
             raise AssertionError(
                 "latest-wins serving and the compacted rebuild disagree"
             )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return out
 
 
@@ -4123,9 +4111,6 @@ def streaming_lsh_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     red row means arithmetic, not banding luck. In-query raises pin
     the layout at each phase — duplicates + non-empty manifest before
     each compaction, exactly one sentinel directory after."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from chicago_crime_spark_ml_spark.operators.dedup import (
         lsh_band_index,
@@ -4160,33 +4145,35 @@ def streaming_lsh_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(is7),       # b1: %7 re-sent true (pre-compaction)
         d.filter(is11),      # b2: %11 re-sent true (post-compaction)
     )
-    root = tempfile.mkdtemp(prefix="stream_lsh_span_")
-    src = os.path.join(root, "src")
-    idx_path = os.path.join(root, "bands")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(src)
 
-    def run_stream() -> None:
-        stream = (
-            spark.readStream.schema("doc_id BIGINT, text STRING")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    def consume(idx: DataFrame) -> DataFrame:
+        return rescore_jaccard(
+            _cell_pairs(idx, ["band", "bucket"]), d, threshold=0.8
         )
-        _drain_stream(
-            streaming_near_dup_ingest(
-                stream,
-                idx_path,
-                os.path.join(root, "pairs"),
-                ckpt,
-                num_hashes=32,
-                band_width=2,
+
+    with tempfile.TemporaryDirectory(
+        prefix="stream_lsh_span_", ignore_cleanup_errors=True
+    ) as root:
+        src = os.path.join(root, "src")
+        idx_path = os.path.join(root, "bands")
+        ckpt = os.path.join(root, "ckpt")
+        os.makedirs(src)
+
+        def run_stream() -> None:
+            _drain_stream(
+                streaming_near_dup_ingest(
+                    _replay_stream(spark, src, "doc_id BIGINT, text STRING"),
+                    idx_path,
+                    os.path.join(root, "pairs"),
+                    ckpt,
+                    num_hashes=32,
+                    band_width=2,
+                )
             )
-        )
 
-    def phase(n_rows: int, multi: bool, label: str) -> None:
-        _assert_span_phase(spark, idx_path, n_rows, multi, label)
+        def phase(n_rows: int, multi: bool, label: str) -> None:
+            _assert_span_phase(spark, idx_path, n_rows, multi, label)
 
-    try:
         want_idx = lsh_band_index(
             d, num_hashes=32, band_width=2
         ).localCheckpoint(eager=True)
@@ -4203,11 +4190,9 @@ def streaming_lsh_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r13: fold the fresh manifest into its sentinel pointer
         # partition — the serving read below must be unaffected
         compact_mv_manifest(spark, idx_path, "doc_id")
-        if [
-            x
-            for x in os.listdir(os.path.join(idx_path, "_mv"))
-            if x.startswith("batch_id=")
-        ] != ["batch_id=-1"]:
+        if _partition_dirs(os.path.join(idx_path, "_mv"), "batch_id=") != [
+            "batch_id=-1"
+        ]:
             raise AssertionError(
                 "manifest self-compaction must leave one sentinel dir"
             )
@@ -4218,22 +4203,6 @@ def streaming_lsh_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["doc_id", "band", "bucket"],
             "doc_id long, band int, bucket bigint",
         ).localCheckpoint(eager=True)
-
-        def consume(idx: DataFrame) -> DataFrame:
-            cand = (
-                idx.select("band", "bucket", F.col("doc_id").alias("id_a"))
-                .join(
-                    idx.select(
-                        "band", "bucket", F.col("doc_id").alias("id_b")
-                    ),
-                    ["band", "bucket"],
-                )
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b")
-                .distinct()
-            )
-            return rescore_jaccard(cand, d, threshold=0.8)
-
         served = {
             (r.id_a, r.id_b, r.jaccard)
             for r in consume(served_idx).collect()
@@ -4241,7 +4210,7 @@ def streaming_lsh_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_ingest_index(spark, idx_path, replace_latest_by="doc_id")
         phase(n_rows, multi=False, label="final compaction")
         idx = spark.read.parquet(idx_path).drop("batch_id")
-        if idx.exceptAll(want_idx).count() + want_idx.exceptAll(idx).count():
+        if not _same_rows(idx, want_idx):
             raise AssertionError(
                 "the twice-compacted band store must equal a rebuild "
                 "over the latest contents"
@@ -4251,8 +4220,6 @@ def streaming_lsh_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError(
                 "latest-wins serving and the compacted rebuild disagree"
             )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return out
 
 
@@ -7446,10 +7413,6 @@ def ivf_compaction_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit-specific, so the driver-checkable output is the verdict
     boolean. Scratch index lives in a driver tempdir, removed before
     returning."""
-    import glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from chicago_crime_spark_ml_spark.operators.similarity import (
         compact_ivf_index,
@@ -7460,9 +7423,10 @@ def ivf_compaction_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     old = emb.filter(F.col("vec_id") % 5 != 0)
-    root = tempfile.mkdtemp(prefix="ivf_compact_")
-    path = os.path.join(root, "ivf")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ivf_compact_", ignore_cleanup_errors=True
+    ) as root:
+        path = os.path.join(root, "ivf")
         write_ivf_index(old, path, n_clusters=8)
         for i in range(3):
             delta_i = emb.filter(
@@ -7490,8 +7454,7 @@ def ivf_compaction_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         one_ingest_per_cell = all(
             len(os.listdir(os.path.join(path, c))) == 1
-            for c in os.listdir(path)
-            if c.startswith("cell=")
+            for c in _partition_dirs(path, "cell=")
         )
         verdict = bool(
             after == before
@@ -7499,8 +7462,6 @@ def ivf_compaction_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             and files_after < files_before
             and one_ingest_per_cell
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         [(verdict,)], "probe_preserved_and_files_reduced boolean"
     )
@@ -7552,10 +7513,6 @@ def ivf_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison cell-layout-independent, so the k-means fit drops out
     of the oracle; partition pruning at partial n_probe is certified
     separately (ivf_compaction_check, ann_ivf_recall_check)."""
-    import glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from chicago_crime_spark_ml_spark.operators.similarity import (
         compact_ivf_index,
@@ -7565,9 +7522,10 @@ def ivf_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    root = tempfile.mkdtemp(prefix="ivf_replace_")
-    path = os.path.join(root, "ivf")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ivf_replace_", ignore_cleanup_errors=True
+    ) as root:
+        path = os.path.join(root, "ivf")
         base = emb.filter(F.col("vec_id") % 5 != 0)
         write_ivf_index(base, path, n_clusters=8)
         d1 = emb.filter(F.col("vec_id") % 5 == 0)
@@ -7600,26 +7558,25 @@ def ivf_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("ingest_seq") == 2, F.col("vec_id"))
             ),
         ).first()
-        assert n_rows == n_ids == emb.count(), (
-            f"replace-compaction left duplicates: {n_rows} rows, "
-            f"{n_ids} ids"
-        )
+        if not n_rows == n_ids == emb.count():
+            raise AssertionError(
+                f"replace-compaction left duplicates: {n_rows} rows, "
+                f"{n_ids} ids"
+            )
         n_changed = emb.filter(F.col("vec_id") % 7 == 0).count()
-        assert n_d2 == n_changed, (
-            f"every changed id must survive at the d2 seq: "
-            f"{n_d2} != {n_changed}"
-        )
-        one_part_per_cell = all(
+        if n_d2 != n_changed:
+            raise AssertionError(
+                f"every changed id must survive at the d2 seq: "
+                f"{n_d2} != {n_changed}"
+            )
+        if not all(
             os.listdir(os.path.join(path, c)) == ["ingest=__compacted__"]
-            for c in os.listdir(path)
-            if c.startswith("cell=")
-        )
-        assert one_part_per_cell, "cells not collapsed to the sentinel"
+            for c in _partition_dirs(path, "cell=")
+        ):
+            raise AssertionError("cells not collapsed to the sentinel")
         rows = [("pre", r.vec_id, r.cosine) for r in pre] + [
             ("post", r.vec_id, r.cosine) for r in post
         ]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return (
         spark.createDataFrame(
             rows, "phase string, vec_id long, cosine double"
@@ -7674,9 +7631,6 @@ def streaming_ivf_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     %7 for the %77 ids; the query vector is vec 0's newest, %77,
     version) — is cell-layout-independent and the k-means fit drops
     out of the oracle."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from chicago_crime_spark_ml_spark.operators.similarity import (
         compact_ivf_index,
@@ -7704,21 +7658,20 @@ def streaming_ivf_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         shifted(F.col("vec_id") % 7 == 0, 0.5),     # b1: %7 changed
         shifted(F.col("vec_id") % 11 == 0, 0.25),   # b2: %11 changed
     )
-    root = tempfile.mkdtemp(prefix="stream_ivf_span_")
-    src = os.path.join(root, "src")
-    path = os.path.join(root, "ivf")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(src)
+    with tempfile.TemporaryDirectory(
+        prefix="stream_ivf_span_", ignore_cleanup_errors=True
+    ) as root:
+        src = os.path.join(root, "src")
+        path = os.path.join(root, "ivf")
+        ckpt = os.path.join(root, "ckpt")
+        os.makedirs(src)
 
-    def run_stream() -> None:
-        stream = (
-            spark.readStream.schema("vec_id BIGINT, embedding ARRAY<DOUBLE>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        _drain_stream(streaming_ivf_ingest(stream, path, ckpt))
+        def run_stream() -> None:
+            stream = _replay_stream(
+                spark, src, "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+            )
+            _drain_stream(streaming_ivf_ingest(stream, path, ckpt))
 
-    try:
         write_ivf_index(emb.filter(F.col("vec_id") % 5 != 0), path, n_clusters=8)
         _stage_span_batch(root, src, 0, batches[0])
         _stage_span_batch(root, src, 1, batches[1])
@@ -7736,17 +7689,16 @@ def streaming_ivf_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError(
                 "replace-compaction must keep exactly one row per id"
             )
-        if [
-            x for x in os.listdir(path + "__seq") if x.startswith("ingest=")
-        ] != ["ingest=__compacted__"]:
+        if _partition_dirs(path + "__seq", "ingest=") != [
+            "ingest=__compacted__"
+        ]:
             raise AssertionError(
                 "compaction must fold the seq registry into one "
                 "sentinel partition"
             )
         if not all(
             os.listdir(os.path.join(path, c)) == ["ingest=__compacted__"]
-            for c in os.listdir(path)
-            if c.startswith("cell=")
+            for c in _partition_dirs(path, "cell=")
         ):
             raise AssertionError("cells not collapsed to the sentinel")
         _stage_span_batch(root, src, 2, batches[2])
@@ -7775,8 +7727,6 @@ def streaming_ivf_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = [("pre", r.vec_id, r.cosine) for r in pre] + [
             ("post", r.vec_id, r.cosine) for r in post
         ]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return (
         spark.createDataFrame(
             rows, "phase string, vec_id long, cosine double"
@@ -12392,29 +12342,13 @@ def lsh_incremental_index_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_rows, pairs = lsh_index_delta(index, delta)
 
     full = lsh_band_index(docs)
-    a = full.select("band", "bucket", F.col("doc_id").alias("ida"))
-    b = full.select("band", "bucket", F.col("doc_id").alias("idb"))
-    is_delta = F.col("ida") % 5 == 0
-    is_delta_b = F.col("idb") % 5 == 0
-    want = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("ida") < F.col("idb"))
-        .filter(is_delta | is_delta_b)
-        .select(F.col("ida").alias("id_a"), F.col("idb").alias("id_b"))
-        .distinct()
+    want = _cell_pairs(full, ["band", "bucket"]).filter(
+        (F.col("id_a") % 5 == 0) | (F.col("id_b") % 5 == 0)
     )
-    pair_diff = (
-        pairs.exceptAll(want).count() + want.exceptAll(pairs).count()
+    ok = _same_rows(pairs, want) and _same_rows(
+        index.unionByName(new_rows), full
     )
-    idx_appended = index.unionByName(new_rows)
-    idx_diff = (
-        idx_appended.exceptAll(full).count()
-        + full.exceptAll(idx_appended).count()
-    )
-    return spark.createDataFrame(
-        [(pair_diff == 0 and idx_diff == 0,)],
-        "incremental_equals_full boolean",
-    )
+    return spark.createDataFrame([(ok,)], "incremental_equals_full boolean")
 
 
 @query(
@@ -13804,9 +13738,6 @@ def frame_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     r11 full-corpus run was the round's priciest row) — junk
     frames embed the doc id, so they can match nothing (no planted
     quadratic hot set; the r11 sweep lesson)."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from chicago_crime_spark_ml_spark.operators.multimodal import (
         frame_index_delta,
@@ -13866,9 +13797,10 @@ def frame_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             frames_expr(True),
         ).otherwise(F.col("frames")),
     )
-    root = tempfile.mkdtemp(prefix="frame_compact_")
-    idx_path = os.path.join(root, "frames")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="frame_compact_", ignore_cleanup_errors=True
+    ) as root:
+        idx_path = os.path.join(root, "frames")
         sig_of(v1).write.mode("overwrite").parquet(f"{idx_path}/batch_id=0")
         resend = sig_of(
             docs.filter(is_a).select(
@@ -13888,23 +13820,13 @@ def frame_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_ingest_index(spark, idx_path, replace_latest_by="doc_id")
         idx = spark.read.parquet(idx_path).drop("batch_id")
         want = sig_of(docs.select("doc_id", frames_expr(False).alias("frames")))
-        if idx.exceptAll(want).count() + want.exceptAll(idx).count() != 0:
+        if not _same_rows(idx, want):
             raise AssertionError(
                 "replace-compacted frame store must equal a rebuild over "
                 "the latest streams"
             )
         idx = idx.localCheckpoint(eager=True)  # survive the rmtree
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    a = idx.select(F.col("doc_id").alias("id_a"), "dhash")
-    b = idx.select(F.col("doc_id").alias("id_b"), "dhash")
-    return (
-        a.join(b, "dhash")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("int").alias("shared_frames"))
-        .filter(F.col("shared_frames") >= 4)
-    )
+    return _shared_frame_pairs(idx)
 
 
 @query(
@@ -13937,9 +13859,6 @@ def streaming_frame_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus; a second replace-compaction must leave the raw store
     row-for-row equal to frame_stream_dhash over the true streams and
     the identical consumer output."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from chicago_crime_spark_ml_spark.operators.multimodal import (
         frame_stream_dhash,
@@ -14038,44 +13957,29 @@ def streaming_frame_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     )
-    root = tempfile.mkdtemp(prefix="stream_frame_span_")
-    src = os.path.join(root, "src")
-    idx_path = os.path.join(root, "frames")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(src)
+    with tempfile.TemporaryDirectory(
+        prefix="stream_frame_span_", ignore_cleanup_errors=True
+    ) as root:
+        src = os.path.join(root, "src")
+        idx_path = os.path.join(root, "frames")
+        ckpt = os.path.join(root, "ckpt")
+        os.makedirs(src)
 
-    def run_stream() -> None:
-        stream = (
-            spark.readStream.schema("doc_id BIGINT, blob BINARY")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        _drain_stream(
-            streaming_media_near_dup_ingest(
-                stream,
-                idx_path,
-                os.path.join(root, "pairs"),
-                ckpt,
-                modality="video",
-                min_shared=4,
+        def run_stream() -> None:
+            _drain_stream(
+                streaming_media_near_dup_ingest(
+                    _replay_stream(spark, src, "doc_id BIGINT, blob BINARY"),
+                    idx_path,
+                    os.path.join(root, "pairs"),
+                    ckpt,
+                    modality="video",
+                    min_shared=4,
+                )
             )
-        )
 
-    def phase(n_rows: int, multi: bool, label: str) -> None:
-        _assert_span_phase(spark, idx_path, n_rows, multi, label)
+        def phase(n_rows: int, multi: bool, label: str) -> None:
+            _assert_span_phase(spark, idx_path, n_rows, multi, label)
 
-    def consume(idx: DataFrame) -> DataFrame:
-        a = idx.select(F.col("doc_id").alias("id_a"), "dhash")
-        b = idx.select(F.col("doc_id").alias("id_b"), "dhash")
-        return (
-            a.join(b, "dhash")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).cast("int").alias("shared_frames"))
-            .filter(F.col("shared_frames") >= 4)
-        )
-
-    try:
         want_idx = sig_of(
             docs.select("doc_id", frames_expr(False, False).alias("frames"))
         ).localCheckpoint(eager=True)
@@ -14110,25 +14014,25 @@ def streaming_frame_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
         served = {
             (r.id_a, r.id_b, r.shared_frames)
-            for r in consume(served_idx).collect()
+            for r in _shared_frame_pairs(served_idx).collect()
         }
         compact_ingest_index(spark, idx_path, replace_latest_by="doc_id")
         phase(n_rows, multi=False, label="final compaction")
         idx = spark.read.parquet(idx_path).drop("batch_id")
-        if idx.exceptAll(want_idx).count() + want_idx.exceptAll(idx).count():
+        if not _same_rows(idx, want_idx):
             raise AssertionError(
                 "the twice-compacted frame store must equal a rebuild "
                 "over the latest streams"
             )
-        out = consume(idx).localCheckpoint(eager=True)  # before rmtree
+        out = _shared_frame_pairs(idx).localCheckpoint(
+            eager=True
+        )  # before rmtree
         if {
             (r.id_a, r.id_b, r.shared_frames) for r in out.collect()
         } != served:
             raise AssertionError(
                 "latest-wins serving and the compacted rebuild disagree"
             )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return out
 
 
@@ -14682,27 +14586,13 @@ def dhash_incremental_index_check(
     new_rows, pairs = dhash_index_delta(index, delta, band_bytes=2)
 
     full = dhash_band_index(sig, band_bytes=2)
-    a = full.select("band", "byte", F.col("doc_id").alias("ida"))
-    b = full.select("band", "byte", F.col("doc_id").alias("idb"))
-    want = (
-        a.join(b, ["band", "byte"])
-        .filter(F.col("ida") < F.col("idb"))
-        .filter((F.col("ida") % 5 == 0) | (F.col("idb") % 5 == 0))
-        .select(F.col("ida").alias("id_a"), F.col("idb").alias("id_b"))
-        .distinct()
+    want = _cell_pairs(full, ["band", "byte"]).filter(
+        (F.col("id_a") % 5 == 0) | (F.col("id_b") % 5 == 0)
     )
-    pair_diff = (
-        pairs.exceptAll(want).count() + want.exceptAll(pairs).count()
+    ok = _same_rows(pairs, want) and _same_rows(
+        index.unionByName(new_rows), full
     )
-    idx_appended = index.unionByName(new_rows)
-    idx_diff = (
-        idx_appended.exceptAll(full).count()
-        + full.exceptAll(idx_appended).count()
-    )
-    return spark.createDataFrame(
-        [(pair_diff == 0 and idx_diff == 0,)],
-        "incremental_equals_full boolean",
-    )
+    return spark.createDataFrame([(ok,)], "incremental_equals_full boolean")
 
 
 @query(
@@ -14771,19 +14661,10 @@ def video_frame_incremental_index_check(
 
     full = video_near_dup_pairs(sig, min_shared=4)
     want = full.filter((F.col("id_a") % 5 == 0) | (F.col("id_b") % 5 == 0))
-    pair_diff = (
-        pairs.exceptAll(want).count() + want.exceptAll(pairs).count()
+    ok = _same_rows(pairs, want) and _same_rows(
+        index.unionByName(new_rows), sig.select("doc_id", "dhash").distinct()
     )
-    full_idx = sig.select("doc_id", "dhash").distinct()
-    idx_appended = index.unionByName(new_rows)
-    idx_diff = (
-        idx_appended.exceptAll(full_idx).count()
-        + full_idx.exceptAll(idx_appended).count()
-    )
-    return spark.createDataFrame(
-        [(pair_diff == 0 and idx_diff == 0,)],
-        "incremental_equals_full boolean",
-    )
+    return spark.createDataFrame([(ok,)], "incremental_equals_full boolean")
 
 
 @query(
@@ -14833,11 +14714,8 @@ def cc_incremental_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = connected_components(old_e)
     updated = connected_components_delta(labels, delta_e)
     full = connected_components(old_e.unionByName(delta_e))
-    diff = (
-        updated.exceptAll(full).count() + full.exceptAll(updated).count()
-    )
     return spark.createDataFrame(
-        [(diff == 0,)], "incremental_equals_full boolean"
+        [(_same_rows(updated, full),)], "incremental_equals_full boolean"
     )
 
 
@@ -14874,9 +14752,6 @@ def cc_labels_upsert_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     (touched < total partitions) — a full rewrite would pass the
     equality check but fail this. Scratch parquet lives in a driver
     tempdir (bounded: node-scale rows), removed before returning."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from chicago_crime_spark_ml_spark.operators.dedup import (
         connected_components,
@@ -14923,9 +14798,10 @@ def cc_labels_upsert_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta_e = edges.filter(F.col("_d")).select("e.id_a", "e.id_b")
 
     part = (F.floor(F.col("node") / F.lit(bw))).cast("bigint").alias("part")
-    root = tempfile.mkdtemp(prefix="cc_labels_")
-    path = os.path.join(root, "labels")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="cc_labels_", ignore_cleanup_errors=True
+    ) as root:
+        path = os.path.join(root, "labels")
         connected_components(old_e).select("node", "label", part).write.mode(
             "overwrite"
         ).partitionBy("part").parquet(path)
@@ -14963,9 +14839,7 @@ def cc_labels_upsert_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
             return sizes, file_spans(d, "node")
 
-        part_dirs = sorted(
-            d for d in os.listdir(path) if d.startswith("part=")
-        )
+        part_dirs = sorted(_partition_dirs(path, "part="))
         before = {d: listing(os.path.join(path, d)) for d in part_dirs}
         n_touched = merge_parquet_partitioned(
             spark, path, changed, keys=["node"], partition_cols=["part"]
@@ -14979,13 +14853,9 @@ def cc_labels_upsert_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         merged_back = spark.read.parquet(path).select("node", "label")
         full = connected_components(old_e.unionByName(delta_e))
-        diff = (
-            merged_back.exceptAll(full).count()
-            + full.exceptAll(merged_back).count()
+        verdict = bool(
+            _same_rows(merged_back, full) and untouched_ok and pruned
         )
-        verdict = bool(diff == 0 and untouched_ok and pruned)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
         [(verdict,)], "upsert_equals_rebuild boolean"
     )
