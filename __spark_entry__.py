@@ -130,6 +130,25 @@ _REWRITTEN_GREENS = [
     # earned green r13 rows on the new impls and dropped; the r13-opt /
     # r14 optimization-rewritten paths below have no driver row on the
     # code that now ships: VERDICT r13 #5 requires fronting them)
+    # the near-dup family moved onto one candidate core in
+    # operators/dedup.py (occupancy guard, cell self-join, set-Jaccard
+    # rescore); the minhash/ngram/video/delta names below run it too
+    "minhash_lsh_recall_check",
+    "near_dup_clusters",
+    "near_dup_canonical_docs",
+    "split_leakage_audit",
+    "cluster_aware_split_assignment",
+    "simhash_near_dups",
+    "simhash_dedup_star_edges",
+    "multimodal_image_near_dup_pairs",
+    "multimodal_image_near_dup_clusters",
+    "multimodal_audio_near_dup_pairs",
+    "multimodal_audio_near_dup_clusters",
+    "multimodal_video_near_dup_pairs",
+    "multimodal_video_near_dup_clusters",
+    "media_curation_funnel",
+    "media_curation_funnel_multimodal",
+    "dedup_documents_exact",
     # the certs moved onto the shared scratch-store / stream-replay /
     # frame-equality helpers in queries.py (the streaming_* and *_check
     # names below are certs too)

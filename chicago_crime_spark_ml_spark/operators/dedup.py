@@ -16,6 +16,16 @@ target near-duplicates at corpus scale:
   instead of all-pairs), with exact output values so the all-pairs SQL
   oracle applies.
 
+The near-dup operators share one candidate core; each keeps only its
+signature step, its checkpoints and its rescore:
+
+- :func:`drop_crowded_cells` — the occupancy guard (one window count
+  per cell; states the recall contract of every ``max_*`` cap);
+- :func:`cell_self_pairs` — the cell equi-self-join emitting each
+  (id_a < id_b) pair once per shared cell;
+- :func:`_set_jaccard` — the set-Jaccard rescore of candidate pairs
+  over hashed shingle sets.
+
 Several operators materialize a reused intermediate via eager
 ``localCheckpoint`` (no session-lifetime cache entry, lineage truncated
 so iterative plans stay bounded). Cluster caveat: truncated lineage
@@ -27,9 +37,9 @@ On a real cluster, set a reliable checkpoint dir and use
 
 from __future__ import annotations
 
-from functools import reduce
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from chicago_crime_spark_ml_spark.operators.incremental import (
@@ -60,6 +70,84 @@ def exact_dedup_by_content(
     )
 
 
+def drop_crowded_cells(
+    rows: DataFrame, cells: Sequence[str], max_rows: int | None
+) -> DataFrame:
+    """Occupancy guard of the near-dup family: keep the rows whose cell
+    (the ``cells`` columns — a shingle, a band bucket, a frame hash)
+    holds between 2 and ``max_rows`` rows; ``None`` means no upper
+    bound. One window count(1) partitioned by the cells — the same hash
+    partitioning the cell self-join needs, so the exchange is reused.
+
+    A one-row cell can never produce a pair, so the lower bound only
+    cuts the join input (in real corpora most shingles are unique).
+    The upper bound is the scale guard: a cell holding k rows emits
+    k²/2 candidates, and one degenerate cell — boilerplate shingles,
+    empty docs whose minimum hash coincides, all-black frames — goes
+    quadratic at corpus scale. Recall contract, shared by every
+    operator's ``max_df`` / ``max_bucket`` cap: an over-full cell is
+    dropped as a whole, so a banded operator (minhash, dHash) loses a
+    candidate only when every cell it shares is over-full, and counts
+    over shared cells (n-gram |∩|, video shared frames) can only go
+    down, so a pair may fall below its threshold — strictly a recall
+    reduction, never a false positive. Over-full cells are
+    hash-degenerate crowds, not near-dup signal."""
+    occ = F.col("_occ")
+    keep = occ >= 2 if max_rows is None else (occ >= 2) & (occ <= max_rows)
+    n = F.count(F.lit(1)).over(Window.partitionBy(*cells))
+    return rows.withColumn("_occ", n).filter(keep).drop("_occ")
+
+
+def cell_self_pairs(
+    rows: DataFrame,
+    cells: Sequence[str],
+    id_col: str,
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """The candidate step of every batch near-dup operator: the
+    equi-self-join of ``rows`` on the ``cells`` columns, one row per
+    shared cell with ``id_a < id_b``. Output: (id_a, id_b) plus
+    ``c_a``/``c_b`` for each carried column ``c``. Callers add their
+    own tail (distinct, shared-cell count, rescore)."""
+    a, b = rows.alias("a"), rows.alias("b")
+    on = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in cells]
+    on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    return a.join(b, on).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        *[
+            F.col(f"{side}.{c}").alias(f"{c}_{side}")
+            for c in carry
+            for side in ("a", "b")
+        ],
+    )
+
+
+def _set_jaccard(
+    cand: DataFrame, sets: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Set-Jaccard rescore of (id_a, id_b) candidates against hashed
+    shingle sets (:func:`_hashed_shingle_sets` rows): |A∩B| by
+    array_intersect over the distinct shingle hashes, J = |∩| /
+    (|A|+|B|−|∩|) ≥ threshold. Returns (id_a, id_b, jaccard) rounded
+    to 4 places."""
+    sa, sb = (
+        sets.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col("hshingles").alias(f"_s{s}"),
+            F.col("n_shingles").alias(f"_n{s}"),
+        )
+        for s in ("a", "b")
+    )
+    inter = F.size(F.array_intersect("_sa", "_sb"))
+    jac = inter / (F.col("_na") + F.col("_nb") - inter)
+    return (
+        cand.select("id_a", "id_b")
+        .join(sa, "id_a")
+        .join(sb, "id_b")
+        .filter(jac >= threshold)
+        .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
+    )
 
 
 def shingle_sets(
@@ -78,7 +166,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.8,
-    prune_unique_shingles: bool = True,
     max_df: int | None = 1000,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (a<b) via inverted-index
@@ -90,24 +177,17 @@ def ngram_jaccard_pairs(
     100 TB: band with MinHash-LSH first (minhash_lsh_pairs) and feed the
     candidate pairs through this exact scorer.
 
-    ``max_df`` is the scale guard for corpus-wide use: postings whose
-    shingle appears in more than ``max_df`` documents are DROPPED before
-    the self-join, so one boilerplate shingle shared by 10⁶ docs can
-    never emit its df² ≈ 10¹² candidate pairs from a single posting
-    list (the default bounds any one shingle at 10⁶ pairs; test-scale
-    corpora never reach it — max df at sf0.1 is 25 — so test results
-    are exact). Recall effect: dropped shingles still count in |A| and |B|
-    (n_shingles is computed from the full set) but can no longer
-    contribute to |∩|, so Jaccard is UNDERESTIMATED for pairs whose
-    overlap is concentrated in ultra-common shingles — strictly a
-    recall reduction, never a false positive, and ultra-common
-    shingles carry ~no near-duplicate signal to begin with.
-    ``max_df=None`` disables the cap (exact, post-LSH-rescorer mode).
-    Every oracle-backed registered query passes ``max_df=None``: their
-    DuckDB oracles compute uncapped all-pairs Jaccard, and a silent
-    df-cap divergence on a corpus with df > max_df would read as an
-    engine bug (ADVICE r4). The capped default is for corpus-wide
-    production use where the oracle contract doesn't apply.
+    ``max_df`` (default 1000; test-scale corpora never reach it — max
+    df at sf0.1 is 25) is the occupancy guard on shingle postings, with
+    the recall contract of :func:`drop_crowded_cells`: dropped shingles
+    still count in |A| and |B| but no longer in |∩|, so Jaccard can only
+    be underestimated. ``max_df=None`` disables the cap (exact,
+    post-LSH-rescorer mode). Every oracle-backed registered query
+    passes ``max_df=None``: their DuckDB oracles compute uncapped
+    all-pairs Jaccard, and a silent df-cap divergence on a corpus with
+    df > max_df would read as an engine bug (ADVICE r4). The capped
+    default is for corpus-wide production use where the oracle
+    contract doesn't apply.
 
     The pruned posting list (id, n_shingles, tok-hash — 8+8+8 bytes per
     posting) is materialized ONCE via an eager localCheckpoint before
@@ -144,97 +224,25 @@ def ngram_jaccard_pairs(
         "n_shingles",
         F.explode("hshingles").alias("tok"),
     )
-    if prune_unique_shingles or max_df is not None:
-        # Prune by document frequency before the self-join, both ends:
-        #  - df_t == 1 shingles can't produce a pair, and in real corpora
-        #    MOST shingles are unique — dropping them cuts the join input
-        #    (and its Σ df_t² output) without changing a single result
-        #    row. Measured cost when the corpus is dense (testdata sf0.1:
-        #    df=1 is only 207 of 27k shingles) is ~10% — disable for
-        #    corpora known to repeat nearly every shingle.
-        #  - df_t > max_df shingles are the quadratic blowup (docstring);
-        #    dropping them bounds the worst posting list.
-        # The window shares the join's hash partitioning on tok (one
-        # exchange gets reused).
-        from pyspark.sql.window import Window  # noqa: PLC0415
-
-        lo = 1 if prune_unique_shingles else 0
-        hi = max_df if max_df is not None else (1 << 62)
-        ex = (
-            ex.withColumn(
-                "_df", F.count(F.lit(1)).over(Window.partitionBy("tok"))
-            )
-            .filter((F.col("_df") > lo) & (F.col("_df") <= hi))
-            .drop("_df")
-        )
-    ex = ex.localCheckpoint(eager=True)
-    a = ex.alias("a")
-    b = ex.alias("b")
-    # Length-ratio prefilter INSIDE the join condition: J ≥ t implies
-    # min(|A|,|B|)/max(|A|,|B|) ≥ t, so pairs whose shingle-count ratio
-    # is below threshold can't qualify — drop them before the pair
-    # aggregation (integer arithmetic, provably no false negatives; the
-    # oracle verifies). Cuts Σ df_t² pair rows whenever doc lengths vary.
+    ex = drop_crowded_cells(ex, ["tok"], max_df).localCheckpoint(eager=True)
+    # Length-ratio prefilter: J ≥ t implies min(|A|,|B|)/max(|A|,|B|) ≥
+    # t, so pairs whose shingle-count ratio is below threshold can't
+    # qualify — drop them before the pair aggregation (integer
+    # arithmetic, provably no false negatives; the oracle verifies).
+    # Catalyst pushes the filter into the join condition. Cuts Σ df_t²
+    # pair rows whenever doc lengths vary.
     ratio_num = int(round(threshold * 1000))
-    na, nb = F.col("a.n_shingles"), F.col("b.n_shingles")
+    na, nb = F.col("n_shingles_a"), F.col("n_shingles_b")
     inter = (
-        a.join(
-            b,
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            & (F.least(na, nb) * 1000 >= F.greatest(na, nb) * ratio_num),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            na.alias("n_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            nb.alias("n_b"),
-        )
+        cell_self_pairs(ex, ["tok"], id_col, carry=("n_shingles",))
+        .filter(F.least(na, nb) * 1000 >= F.greatest(na, nb) * ratio_num)
+        .groupBy("id_a", na.alias("n_a"), "id_b", nb.alias("n_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
     return (
         inter.filter(jac >= threshold)
         .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
-    )
-
-
-def simhash_expr(tokens: F.Column, bits: int = SIMHASH_BITS) -> F.Column:
-    """60-bit SimHash of a token array, as one Column expression.
-
-    Per token: h = int(md5[:15 hex]) (cross-engine reproducible — same
-    construction works in DuckDB: ('0x'||substr(md5(t),1,15))::BIGINT).
-    Per bit b: S_b = Σ_tokens (2·bit_b(h)−1); signature bit b = [S_b > 0].
-    Implemented with aggregate() over the array — no explode, no shuffle:
-    the whole signature is computed map-side per document.
-    """
-    # Hash ONCE per token (md5 is the expensive part — folding over raw
-    # tokens would re-evaluate it per bit, 60×), then fold bit-sums over
-    # the precomputed hash array.
-    hashes = F.transform(
-        tokens, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-    )
-
-    def bit_sums(acc, th):
-        return F.struct(
-            *[
-                (
-                    acc.getField(f"s{b}")
-                    + (F.shiftright(th, b).bitwiseAND(1) * 2 - 1)
-                ).alias(f"s{b}")
-                for b in range(bits)
-            ]
-        )
-
-    zero = F.struct(*[F.lit(0).cast("long").alias(f"s{b}") for b in range(bits)])
-    sums = F.aggregate(hashes, zero, bit_sums)
-    return reduce(
-        lambda a, b: a + b,
-        [
-            F.when(sums.getField(f"s{b}") > 0, F.lit(1 << b).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-            for b in range(bits)
-        ],
     )
 
 
@@ -257,8 +265,8 @@ def add_simhash(
     with a million distinct tokens).
 
     Signature bit b is set iff cnt_b > n/2, i.e. 2·cnt_b − n > 0 — the
-    standard Σ(±1) > 0 rule, matching the DuckDB oracle CTE. (The
-    no-shuffle array-fold variant, simhash_expr, produces identical
+    standard Σ(±1) > 0 rule, matching the DuckDB oracle CTE. (A
+    no-shuffle array-fold over the token hashes produces identical
     results but Spark evaluates big struct folds interpreted — measured
     ~10× slower; the explode path's doc_id shuffle is partial-aggregated
     map-side and scales linearly.)
@@ -357,21 +365,10 @@ def simhash_hamming_pairs(
             )
         ).alias("bv"),
     ).select(id_col, "simhash", "bv.band", "bv.val")
-    a, b = bands.alias("a"), bands.alias("b")
+    xor = F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
+        cell_self_pairs(bands, ["band", "val"], id_col, carry=("simhash",))
+        .select("id_a", "id_b", F.bit_count(xor).alias("hamming"))
         .distinct()
     )
     return cand.filter(F.col("hamming") <= max_hamming)
@@ -467,8 +464,6 @@ def near_dup_star_edges(
         F.col("label").alias("rep_id"), F.col("node").alias("member_id")
     )
     if max_members_per_component is not None:
-        from pyspark.sql import Window  # noqa: PLC0415
-
         w = Window.partitionBy("rep_id").orderBy("member_id")
         star = (
             star.withColumn("_rn", F.row_number().over(w))
@@ -653,7 +648,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 8,
     jaccard_threshold: float = 0.8,
     seed: int = 42,
-    margin: float = 0.0,
     max_bucket: int | None = 10_000,
     band_width: int = 1,
 ) -> DataFrame:
@@ -662,7 +656,7 @@ def minhash_lsh_pairs(
     for candidates → set-Jaccard rescore on the hashed shingle sets
     (exact up to 2^-64 xxhash64 collisions — array_intersect runs on
     64-bit shingle hashes and set sizes come from the hashed arrays,
-    see _hashed_shingle_sets) → pairs with jaccard ≥ threshold − margin.
+    see _hashed_shingle_sets) → pairs with jaccard ≥ threshold.
 
     THE scale path: candidate generation is a bucket equi-join
     (sublinear), never an all-pairs comparison. Because candidates are
@@ -687,67 +681,25 @@ def minhash_lsh_pairs(
     candidates, an order of magnitude faster, and — with the pure-SQL
     hash family — free of MLlib fit jobs and Python boundaries.
 
-    ``max_bucket`` is the skew guard (the banding analogue of
-    ngram_jaccard_pairs' max_df): a (band, bucket) cell holding k docs
-    emits k²/2 candidates, and one degenerate bucket — empty docs,
-    boilerplate whose minimum hash coincides — can go quadratic at
-    100 TB. Cells above the cap are dropped from THAT band only; a true
-    pair is lost only if every one of its colliding bands is capped
-    (recall note: at J ≥ 0.8 a pair colliding only in capped buckets has
-    probability ≈ (1−J·p_cap)^8 of loss; ultra-popular buckets are
-    hash-degenerate crowds, not near-dup signal). Default 10 000 never
-    binds at test scale (max occupancy 144 at sf1); ``None`` disables.
+    ``max_bucket`` (default 10 000; never binds at test scale — max
+    occupancy 144 at sf1) is the occupancy guard on (band, bucket)
+    cells, with the recall contract of :func:`drop_crowded_cells`;
+    ``None`` disables.
     """
-    from pyspark.sql.window import Window  # noqa: PLC0415
-
     # hashed shingle sets are used twice (banding + exact rescore) and
     # arrive already materialized (single-eval checkpoint inside the
     # helper; cluster caveat in module docstring)
     sets = _hashed_shingle_sets(
         _parallelize_narrow_scan(df), text_col, id_col, n
     )
-    idx = _minhash_bands(sets, id_col, num_hashes, seed, band_width)
-    if max_bucket is not None:
-        idx = (
-            idx.withColumn(
-                "_occ",
-                F.count(F.lit(1)).over(Window.partitionBy("band", "bucket")),
-            )
-            .filter(F.col("_occ") <= max_bucket)
-            .drop("_occ")
-        )
-    a, b = idx.alias("a"), idx.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
+    cells = ["band", "bucket"]
+    idx = drop_crowded_cells(
+        _minhash_bands(sets, id_col, num_hashes, seed, band_width),
+        cells,
+        max_bucket,
     )
-    sa = sets.select(
-        F.col(id_col).alias("id_a"),
-        F.col("hshingles").alias("_sa"),
-        F.col("n_shingles").alias("_na"),
-    )
-    sb = sets.select(
-        F.col(id_col).alias("id_b"),
-        F.col("hshingles").alias("_sb"),
-        F.col("n_shingles").alias("_nb"),
-    )
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    jac = inter / (F.col("_na") + F.col("_nb") - inter)
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(jac >= jaccard_threshold - margin)
-        .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
-    )
+    cand = cell_self_pairs(idx, cells, id_col).distinct()
+    return _set_jaccard(cand, sets, id_col, jaccard_threshold)
 
 
 def lsh_band_index(
@@ -846,10 +798,10 @@ def rescore_jaccard(
 ) -> DataFrame:
     """Exact n-gram set-Jaccard rescore of CANDIDATE pairs — the
     shared back half of every LSH pipeline, public so the incremental
-    path (lsh_index_delta emits candidates; rescoring was "the
-    caller's step") gets the identical arithmetic as the batch
-    minhash_lsh_pairs rescore: hashed shingle sets (xxhash64 longs,
-    single-eval checkpoint), array_intersect, jaccard ≥ threshold.
+    path (lsh_index_delta emits candidates; rescoring is "the
+    caller's step") runs the same :func:`_set_jaccard` as the batch
+    minhash_lsh_pairs: hashed shingle sets (xxhash64 longs, single-eval
+    checkpoint), array_intersect, jaccard ≥ threshold.
     Shingle sets are computed ONLY for docs appearing in a candidate
     pair (semi-join on the pair ids) — at 100 TB the candidate set is
     delta-scale, so the rescore never re-shingles the corpus. Returns
@@ -863,22 +815,4 @@ def rescore_jaccard(
     sets = _hashed_shingle_sets(
         docs.join(ids, id_col, "left_semi"), text_col, id_col, n
     )
-    sa = sets.select(
-        F.col(id_col).alias("id_a"),
-        F.col("hshingles").alias("_sa"),
-        F.col("n_shingles").alias("_na"),
-    )
-    sb = sets.select(
-        F.col(id_col).alias("id_b"),
-        F.col("hshingles").alias("_sb"),
-        F.col("n_shingles").alias("_nb"),
-    )
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    jac = inter / (F.col("_na") + F.col("_nb") - inter)
-    return (
-        cand.select("id_a", "id_b")
-        .join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
-    )
+    return _set_jaccard(cand, sets, id_col, threshold)

@@ -32,6 +32,10 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chicago_crime_spark_ml_spark.operators.dedup import (
+    cell_self_pairs,
+    drop_crowded_cells,
+)
 from chicago_crime_spark_ml_spark.operators.incremental import (
     classify_resends,
     delta_cell_pairs,
@@ -672,17 +676,13 @@ def dhash_hamming_pairs(
     equi-join → zip_with xor + bit_count. Signatures are eagerly
     checkpointed once (two join branches).
 
-    ``max_bucket`` is the skew guard (the dHash analogue of
-    minhash_lsh_pairs' cap, added there in r4 after the uncapped shape
-    measured 15.4× superlinear at 10× data): a (band, value) cell
-    holding k images emits k²/2 candidates, and one degenerate cell —
-    all-black frames, flat scans whose row collapses to byte 0x00 —
-    goes quadratic at corpus scale. Cells above the cap are dropped
-    from THAT band only; a true pair is lost only if EVERY band it
-    collides in is over-full (pigeonhole gives a hamming-0 pair all
-    n_bands chances), and over-full cells are hash-degenerate crowds,
-    not near-dup signal. Default 10 000 never binds at certified test
-    scale, so oracle-backed queries stay exact; ``None`` disables."""
+    ``max_bucket`` (default 10 000; never binds at certified test
+    scale, so oracle-backed queries stay exact) is the occupancy guard
+    on (band, byte) cells — all-black frames, flat scans whose row
+    collapses to byte 0x00 — with the recall contract of
+    :func:`~chicago_crime_spark_ml_spark.operators.dedup.drop_crowded_cells`
+    (pigeonhole gives a hamming-0 pair all n_bands chances); ``None``
+    disables."""
     n_bands = {1: 8, 2: 4}.get(band_bytes)
     if n_bands is None:
         raise ValueError(f"band_bytes must be 1 or 2; got {band_bytes}")
@@ -693,32 +693,11 @@ def dhash_hamming_pairs(
             f"got max_distance={max_distance}"
         )
     sig = hashes.select(id_col, "row_bytes").localCheckpoint(eager=True)
-    band = _dhash_bands(sig, id_col, band_bytes)
-    if max_bucket is not None:
-        from pyspark.sql.window import Window  # noqa: PLC0415
-
-        band = (
-            band.withColumn(
-                "_occ",
-                F.count(F.lit(1)).over(Window.partitionBy("band", "byte")),
-            )
-            .filter(F.col("_occ") <= max_bucket)
-            .drop("_occ")
-        )
-    cand = (
-        band.alias("x")
-        .join(
-            band.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.byte") == F.col("y.byte"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
-        )
-        .select(
-            F.col(f"x.{id_col}").alias("id_a"),
-            F.col(f"y.{id_col}").alias("id_b"),
-        )
-        .distinct()
+    cells = ["band", "byte"]
+    band = drop_crowded_cells(
+        _dhash_bands(sig, id_col, band_bytes), cells, max_bucket
     )
+    cand = cell_self_pairs(band, cells, id_col).distinct()
     a = sig.select(
         F.col(id_col).alias("id_a"), F.col("row_bytes").alias("rb_a")
     )
@@ -848,42 +827,18 @@ def video_near_dup_pairs(
     hashes; the shared-count threshold is the dedup knob). Hash-keyed
     equi-join on the distinct (id, dhash) set — never all-pairs.
 
-    ``max_df`` is the hot-frame guard (the exact ngram_jaccard_pairs
-    max_df idiom): a frame hash appearing in more than ``max_df``
-    distinct streams — an all-black frame, a shared intro card — is
-    DROPPED before the self-join, so one stopword-frame shared by 10⁶
-    clips can never emit its df²/2 candidate pairs. Recall effect:
-    dropped hashes can no longer count toward shared_frames, so a pair
-    whose overlap is concentrated in ultra-common frames may fall
-    below ``min_shared`` — strictly a recall reduction, never a false
-    positive, and corpus-ubiquitous frames carry ~no near-dup signal.
-    Default 10 000 never binds at certified test scale, so
-    oracle-backed queries stay exact; ``None`` disables."""
-    d = sig.select(id_col, "dhash").distinct()
-    if max_df is not None:
-        from pyspark.sql.window import Window  # noqa: PLC0415
-
-        d = (
-            d.withColumn(
-                "_df",
-                F.count(F.lit(1)).over(Window.partitionBy("dhash")),
-            )
-            .filter(F.col("_df") <= max_df)
-            .drop("_df")
-        )
-    d = d.localCheckpoint(eager=True)
-    a = d.alias("a")
-    b = d.alias("b")
+    ``max_df`` (default 10 000; never binds at certified test scale,
+    so oracle-backed queries stay exact) is the hot-frame guard — an
+    all-black frame, a shared intro card — with the recall contract of
+    :func:`~chicago_crime_spark_ml_spark.operators.dedup.drop_crowded_cells`:
+    dropped hashes no longer count toward shared_frames; ``None``
+    disables."""
+    d = drop_crowded_cells(
+        sig.select(id_col, "dhash").distinct(), ["dhash"], max_df
+    ).localCheckpoint(eager=True)
     return (
-        a.join(
-            b,
-            (F.col("a.dhash") == F.col("b.dhash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
+        cell_self_pairs(d, ["dhash"], id_col)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("int").alias("shared_frames"))
         .filter(F.col("shared_frames") >= min_shared)
     )
@@ -912,10 +867,12 @@ def frame_index_delta(
     DISTINCT frame hashes — exactly the pairs a full
     :func:`video_near_dup_pairs` rebuild would emit that involve a
     delta stream (certified by video_frame_incremental_index_check).
-    ``max_df`` prunes corpus-ubiquitous frame hashes by document
-    frequency over index ∪ delta — the same recall-only hot-frame
-    guard as the batch operator, and the df is computed over the same
-    total corpus, so delta == rebuild even when the guard binds.
+    ``max_df`` (default 10 000) prunes corpus-ubiquitous frame hashes
+    by document frequency over index ∪ delta — the batch operator's
+    hot-frame guard, with the recall contract of
+    :func:`~chicago_crime_spark_ml_spark.operators.dedup.drop_crowded_cells`;
+    the df is computed over the same total corpus, so delta == rebuild
+    even when the guard binds.
     History is never re-compared against itself: O(delta·occupancy).
 
     Replay/re-ingest idempotence (ADVICE r8): postings of a delta
@@ -958,18 +915,9 @@ def frame_index_delta(
     [fresh], changed_ids = classify_resends(
         [stored], [d], id_col, count_check=True
     )
-    both = stored.unionByName(fresh)
-    if max_df is not None:
-        from pyspark.sql.window import Window  # noqa: PLC0415
-
-        both = (
-            both.withColumn(
-                "_df", F.count(F.lit(1)).over(Window.partitionBy("dhash"))
-            )
-            .filter(F.col("_df") <= max_df)
-            .drop("_df")
-        )
-    both = both.localCheckpoint(eager=True)
+    both = drop_crowded_cells(
+        stored.unionByName(fresh), ["dhash"], max_df
+    ).localCheckpoint(eager=True)
     probe = both.join(d.select(id_col).distinct(), id_col, "left_semi")
     cand = (
         probe.alias("x")

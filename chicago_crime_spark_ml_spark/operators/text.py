@@ -797,34 +797,16 @@ def compression_ratio(
     return df.select(*cols)
 
 
-def _window_hash_expr(t: Column, k: int) -> Column:
-    """k-token window hashes for a token array — md5[:15hex]→bigint
-    (the engine's cross-engine 60-bit hash idiom), one entry per window
+def _window_hashes_sql(text_col: str, k: int) -> str:
+    """k-token window hashes of ``text_col`` — md5[:15hex]→bigint (the
+    engine's cross-engine 60-bit hash idiom), one entry per window
     start 1..n-k+1; empty array when the doc is shorter than k. Shared
     by :func:`duplicated_span_profile` (the diagnostic) and
     :func:`excise_duplicated_spans` (the action), so both certify the
-    same window space."""
-    return F.when(
-        F.size(t) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - (k - 1)),
-            lambda i: F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(" ", F.slice(t, i, k))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long"),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-
-
-def _window_hashes_sql(text_col: str, k: int) -> str:
-    """SQL-string twin of ``let_expr(tokens_expr(text_col), t ->
-    _window_hash_expr(t, k))`` — the full tokenize→window-hash tree as
-    ONE parseable string (r13-opt: the Column form cost ~0.3 s of
-    per-node Py4J round-trips per query construction; identical
-    analyzed plan, fingerprint-verified)."""
+    same window space. The full tokenize→window-hash tree is ONE
+    parseable string (r13-opt: the Column form cost ~0.3 s of per-node
+    Py4J round-trips per query construction; identical analyzed plan,
+    fingerprint-verified)."""
     body = (
         f"CASE WHEN size(t) >= {k} THEN transform("
         f"sequence(1, size(t) - {k - 1}), "

@@ -1894,7 +1894,8 @@ _SIMHASH_BITS = 60
 
 def _simhash_cte() -> str:
     """Per-doc 60-bit SimHash as DuckDB SQL (CTE named ``sims``) — the
-    same md5[:15-hex] construction as operators.dedup.simhash_expr."""
+    same md5[:15-hex] token hash and Σ(±1) > 0 bit rule as
+    operators.dedup.add_simhash."""
     bit_sums = ", ".join(
         f"sum(((h >> {b}) & 1) * 2 - 1) AS s{b}" for b in range(_SIMHASH_BITS)
     )
@@ -2736,11 +2737,11 @@ def dedup_documents_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact content dedup: group on the content hash (md5 — shuffles
     16-byte keys instead of whole documents: the 100 TB-friendly form),
     keep the minimum id as the deterministic winner."""
-    d = _t(spark, sf_dir, "documents")
-    return d.groupBy(F.md5("text").alias("fp")).agg(
-        F.min("doc_id").alias("doc_id"),
-        F.count(F.lit(1)).alias("n_copies"),
+    from chicago_crime_spark_ml_spark.operators.dedup import (
+        exact_dedup_by_content,
     )
+
+    return exact_dedup_by_content(_t(spark, sf_dir, "documents"))
 
 
 @query(
@@ -7251,19 +7252,12 @@ def minhash_lsh_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     exact = ngram_jaccard_pairs(d, threshold=0.8, max_df=None).select("id_a", "id_b")
-    # margin=0.1: nets candidates wider than the audit threshold and lets
-    # the exact side adjudicate, as the production pipeline does (the
-    # rescore is exact since the round-4 rewrite, so the margin now only
-    # guards the audit against its own threshold sitting on a pair's
-    # exact value)
-    cand = minhash_lsh_pairs(d, jaccard_threshold=0.8, margin=0.1).select(
-        F.col("id_a").alias("ca"), F.col("id_b").alias("cb")
-    )
-    # candidates are unordered pairs from approxSimilarityJoin — normalize
-    norm = cand.select(
-        F.least("ca", "cb").alias("id_a"), F.greatest("ca", "cb").alias("id_b")
-    ).distinct()
-    missed = exact.join(norm, ["id_a", "id_b"], "left_anti")
+    # LSH threshold 0.7, below the audit's 0.8: nets candidates wider
+    # than the audited set and lets the exact side adjudicate, so the
+    # audit never hinges on its own threshold sitting on a pair's exact
+    # value. The candidates are distinct id_a < id_b pairs already.
+    cand = minhash_lsh_pairs(d, jaccard_threshold=0.7).select("id_a", "id_b")
+    missed = exact.join(cand, ["id_a", "id_b"], "left_anti")
     return exact.agg(F.count(F.lit(1)).alias("n_exact_pairs")).crossJoin(
         missed.agg((F.count(F.lit(1)) == 0).alias("all_recovered"))
     )

@@ -539,6 +539,51 @@ def test_max_df_caps_boilerplate_shingle_blowup(spark):
     }
 
 
+def test_minhash_max_bucket_drops_crowded_family(spark):
+    """k identical docs fill every (band, bucket) cell they hash to with
+    k rows; a cap below k drops those cells in every band, so the whole
+    family's pairs vanish while a separate identical pair (disjoint
+    vocabulary, so it never shares a bucket with the family) survives.
+    Uncapped, every pair appears."""
+    k = 5
+    family = "alpha beta gamma delta epsilon zeta eta theta"
+    twin = "one two three four five six seven eight"
+    rows = [(i, family) for i in range(k)] + [(100, twin), (101, twin)]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+
+    capped = minhash_lsh_pairs(df, max_bucket=k - 1).collect()
+    assert [(r.id_a, r.id_b, r.jaccard) for r in capped] == [(100, 101, 1.0)]
+
+    uncapped = {
+        (r.id_a, r.id_b) for r in minhash_lsh_pairs(df, max_bucket=None).collect()
+    }
+    family_pairs = {(a, b) for a in range(k) for b in range(a + 1, k)}
+    assert uncapped == family_pairs | {(100, 101)}
+
+
+def test_drop_crowded_cells_keeps_2_to_max(spark):
+    """The shared occupancy guard keeps exactly the cells holding 2..max
+    rows: one-row cells can never pair, over-full cells are dropped
+    whole; with no cap every cell of 2 or more rows stays."""
+    from chicago_crime_spark_ml_spark.operators.dedup import drop_crowded_cells
+
+    cap = 3
+    sizes = {"one": 1, "two": 2, "max": cap, "over": cap + 1}
+    rows = [(c, i) for c, n in sizes.items() for i in range(n)]
+    df = spark.createDataFrame(rows, ["cell", "doc_id"])
+
+    def kept(max_rows):
+        out = drop_crowded_cells(df, ["cell"], max_rows)
+        assert out.columns == ["cell", "doc_id"]
+        return sorted((r.cell, r.doc_id) for r in out.collect())
+
+    def rows_of(*cells):
+        return sorted(r for r in rows if r[0] in cells)
+
+    assert kept(cap) == rows_of("two", "max")
+    assert kept(None) == rows_of("two", "max", "over")
+
+
 def test_minhash_bands_are_distinct_hash_functions(spark):
     """Regression lock for the transform-lambda arity trap: a
     two-parameter lambda (`lambda h, i=i:`) is PySpark's (element,
