@@ -1606,55 +1606,6 @@ def transcode_audio(
     )
 
 
-def extract_features_arrow(
-    df: DataFrame,
-    blob_col: str = "blob",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """mapInArrow twin of :func:`extract_features`: operates on pyarrow
-    RecordBatches directly — no pandas materialization, no index/dtype
-    conversion overhead on the Python side of the Arrow boundary. Same
-    deterministic byte-stat features; equality with the pandas path is
-    asserted in tests. Prefer this form when the per-batch work is
-    numpy-expressible and batches are large (the conversion overhead is
-    what you save)."""
-
-    def batches(it):
-        import numpy as np  # noqa: PLC0415
-        import pyarrow as pa  # noqa: PLC0415
-
-        for batch in it:
-            ids = batch.column(batch.schema.get_field_index(id_col))
-            blobs = batch.column(batch.schema.get_field_index(blob_col))
-            feats, nbytes = [], []
-            for buf in blobs:
-                arr = np.frombuffer(buf.as_py(), dtype=np.uint8)
-                n = int(arr.size)
-                nbytes.append(n)
-                feats.append(
-                    [
-                        float(arr.mean()) / 255.0 if n else 0.0,
-                        float(arr.std()) / 255.0 if n else 0.0,
-                        float(arr.min()) / 255.0 if n else 0.0,
-                        float(n % 997) / 997.0,
-                    ]
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    # must match FEATURES_SCHEMA exactly: n_bytes is INT
-                    # (arrow int32) — mapInArrow does no implicit casting,
-                    # unlike the pandas path
-                    pa.array(nbytes, type=pa.int32()),
-                    pa.array(feats, type=pa.list_(pa.float64())),
-                ],
-                names=["doc_id", "n_bytes", "features"],
-            )
-
-    narrow = df.select(F.col(id_col), F.col(blob_col))
-    return narrow.mapInArrow(batches, schema=FEATURES_SCHEMA)
-
-
 # ---------------------------------------------------------------- synthesis
 # Blob synthesis: encode NUMERIC columns into real WAV/netpbm blobs.
 # This is what makes the real-codec paths driver-certifiable with no

@@ -220,45 +220,6 @@ def ann_ivf_topk(
     )
 
 
-def cosine_topk_pandas(
-    df: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Same contract as cosine_topk, scored by an Arrow-vectorized scalar
-    ``@pandas_udf`` — the when-you-must Python path done right: whole
-    Arrow batches become one numpy matrix multiply per batch (vs ~100×
-    slower row-at-a-time Python UDFs). Exists so the engine demonstrates
-    and tests BOTH scoring tiers; the JVM Column-algebra form
-    (cosine_topk) remains the default — it needs no Python workers at
-    all. A test asserts the two return identical top-k."""
-    import numpy as np  # noqa: PLC0415
-    import pandas  # noqa: PLC0415
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    # pandas_udf resolves the closure's type hints against MODULE globals
-    # (typing.get_type_hints); inject lazily so the JVM-only paths in this
-    # module never require pandas at import time.
-    globals().setdefault("pandas", pandas)
-
-    q = np.asarray(list(query_vec), dtype=np.float64)
-
-    @pandas_udf("double")
-    def cos(vecs: pandas.Series) -> pandas.Series:
-        m = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        dots = m @ q
-        norms = np.linalg.norm(m, axis=1) * np.linalg.norm(q)
-        return pandas.Series(dots / norms)
-
-    return (
-        df.select(F.col(id_col), F.round(cos(F.col(vec_col)), 4).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def _block_pair_gen(cut: float):
     """mapInPandas generator over block-pair rows (bx, xids, xv, by,
     yids, yv): one BLAS matmul per block pair, emitting candidate

@@ -22,7 +22,7 @@ import shutil
 import tempfile
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -93,6 +93,67 @@ def _doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return parallelize_narrow_scan(
         load_table(spark, sf_dir, "documents").select("doc_id")
+    )
+
+
+# Synthetic-media builders of the multimodal queries: JVM Column algebra
+# whose every pixel/sample is one md5 byte, so each DuckDB oracle
+# replays the same bytes closed-form. They only build query INPUTS —
+# the oracle strings stay the independent reference.
+
+
+def _md5_byte(*parts) -> Column:
+    """The one pixel/sample hash: the first md5 byte of the
+    ``_``-joined parts, as an int in [0, 256)."""
+    return F.conv(
+        F.substring(F.md5(F.concat_ws("_", *parts)), 1, 2), 16, 10
+    ).cast("int")
+
+
+def _raster(pixel, rows: int = 16, cols: int = 18) -> Column:
+    """A rows×cols int array of arrays with ``pixel(r, c)`` at (r, c)."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(rows - 1)),
+        lambda r: F.transform(
+            F.sequence(F.lit(0), F.lit(cols - 1)), lambda c: pixel(r, c)
+        ),
+    )
+
+
+def _video_frame(g: Column, label: Column) -> Column:
+    """One 16×18 frame of family ``g``: md5 pixels of (g, label, r, c)."""
+    return _raster(lambda r, c: _md5_byte(g, label, r, c))
+
+
+def _video_frames(g: Column) -> Column:
+    """The standard 6-frame stream of family ``g``: frames labelled
+    '0'..'5', with frame 5 relabelled 'z' on odd docs."""
+    odd = F.col("doc_id") % 2 == 1
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(5)),
+        lambda fi: _video_frame(
+            g,
+            F.when(odd & (fi == 5), F.lit("z")).otherwise(fi.cast("string")),
+        ),
+    )
+
+
+def _append_frame(
+    frames: Column, cond: Column, g: Column, label: Column
+) -> Column:
+    """``frames`` with one more frame (family ``g``, ``label``) appended
+    on the rows where ``cond`` holds."""
+    extra = F.concat(frames, F.array(_video_frame(g, label)))
+    return F.when(cond, extra).otherwise(frames)
+
+
+def _audio_track(f: Column) -> Column:
+    """The md5 waveform of family ``f``: ``130 + (f % 3) * 65`` samples
+    in [-0.5, 0.5), sample i the md5 byte of (f, i)."""
+    n = (F.lit(130) + (f % 3) * 65).cast("int")
+    return F.transform(
+        F.sequence(F.lit(0), n - 1),
+        lambda i: (_md5_byte(f, i) - 128).cast("double") / 256.0,
     )
 
 
@@ -2584,37 +2645,8 @@ def video_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _doc_ids(spark, sf_dir)
     g = F.floor(F.col("doc_id") / F.lit(4))
-    frames = F.transform(
-        F.sequence(F.lit(0), F.lit(5)),
-        lambda fi: F.transform(
-            F.sequence(F.lit(0), F.lit(15)),
-            lambda r: F.transform(
-                F.sequence(F.lit(0), F.lit(17)),
-                lambda c: F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "_",
-                                g,
-                                F.when(
-                                    (F.col("doc_id") % 2 == 1) & (fi == 5),
-                                    F.lit("z"),
-                                ).otherwise(fi.cast("string")),
-                                r,
-                                c,
-                            )
-                        ),
-                        1,
-                        2,
-                    ),
-                    16,
-                    10,
-                ).cast("int"),
-            ),
-        ),
-    )
     blobs = synthesize_netpbm_stream_blobs(
-        docs.select("doc_id", frames.alias("frames"))
+        docs.select("doc_id", _video_frames(g).alias("frames"))
     )
     sig = frame_stream_dhash(blobs).localCheckpoint(eager=True)
     hist = sig.filter(F.col("doc_id") % 5 != 0)
@@ -3816,10 +3848,17 @@ def streaming_lexical_ingest_check(
 
 # Shared harness of the certification queries (the *_check certs and
 # the stream-spans-a-compaction family): scratch stores live in a
-# ``tempfile.TemporaryDirectory`` per cert, and staging, replay,
-# frame equality, the reference index consumers and layout probes are
-# the helpers below — one copy each, so a fix lands once and the certs
-# cannot silently drift apart.
+# ``tempfile.TemporaryDirectory`` per cert, and the helpers below hold
+# one copy each of staging, replay and drain (_stage_span_batch,
+# _replay_stream, _drain_stream), the span certs' stop-compact-resume
+# run (_span_run), frame equality (_same_rows), the reference index
+# consumers (_cell_pairs, _frame_sigs, _shared_frame_pairs), layout
+# probes (_partition_dirs, _assert_span_phase, _assert_cells_compacted)
+# and the IVF replace certs' inputs and probes (_shifted_vectors,
+# _ivf_query_vector, _ivf_replace_probes) — so a fix lands once and the
+# certs cannot silently drift apart. The media inputs come from the
+# synthetic-media builders (_md5_byte, _raster, _video_frame,
+# _video_frames, _append_frame, _audio_track).
 
 
 def _stage_span_batch(root: str, src: str, i: int, frame: DataFrame) -> None:
@@ -3854,6 +3893,34 @@ def _drain_stream(q) -> None:
         q.stop()
 
 
+def _span_run(
+    spark: SparkSession,
+    root: str,
+    batches,
+    schema: str,
+    start: Callable,
+    compact: Callable[[], object],
+    check: Callable[[str], None],
+) -> None:
+    """The span certs' maintenance window: stage ``batches`` b0 and b1,
+    drain ``start(stream, ckpt)``, check, STOP and ``compact()``, check,
+    stage b2 and RESUME from the same checkpoint, check. ``check`` gets
+    the phase label ("pre-compaction", "post-compaction",
+    "post-resume") and raises if the store's layout is wrong."""
+    src = os.path.join(root, "src")
+    ckpt = os.path.join(root, "ckpt")
+    os.makedirs(src)
+    _stage_span_batch(root, src, 0, batches[0])
+    _stage_span_batch(root, src, 1, batches[1])
+    _drain_stream(start(_replay_stream(spark, src, schema), ckpt))
+    check("pre-compaction")
+    compact()
+    check("post-compaction")
+    _stage_span_batch(root, src, 2, batches[2])
+    _drain_stream(start(_replay_stream(spark, src, schema), ckpt))
+    check("post-resume")
+
+
 def _same_rows(a: DataFrame, b: DataFrame) -> bool:
     """Multiset equality of two frames with the same column layout:
     ``exceptAll`` both ways (duplicates count, unlike ``subtract``),
@@ -3871,6 +3938,21 @@ def _cell_pairs(idx: DataFrame, cells: list[str]) -> DataFrame:
         .join(idx.select(*cells, F.col("doc_id").alias("id_b")), cells)
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+def _frame_sigs(frame_docs: DataFrame) -> DataFrame:
+    """The (doc_id, dhash) frame store of (doc_id, frames) streams:
+    synthesize, decode, per-frame dHash, distinct postings."""
+    from chicago_crime_spark_ml_spark.operators.multimodal import (
+        frame_stream_dhash,
+        synthesize_netpbm_stream_blobs,
+    )
+
+    return (
+        frame_stream_dhash(synthesize_netpbm_stream_blobs(frame_docs))
+        .select("doc_id", "dhash")
         .distinct()
     )
 
@@ -3927,6 +4009,56 @@ def _assert_span_phase(
             f"{label}: expected latest-only rows under batch_id=-1 "
             f"with the manifest retired, got rows={n} mv={mv_rows}"
         )
+
+
+def _assert_cells_compacted(path: str) -> None:
+    """Every ``cell=`` directory of an IVF store holds exactly the one
+    compacted ``ingest=__compacted__`` partition."""
+    if not all(
+        os.listdir(os.path.join(path, c)) == ["ingest=__compacted__"]
+        for c in _partition_dirs(path, "cell=")
+    ):
+        raise AssertionError("cells not collapsed to the sentinel")
+
+
+def _shifted_vectors(emb: DataFrame, pred: Column, delta: float) -> DataFrame:
+    """The (vec_id, embedding) rows matching ``pred`` with every
+    component shifted by ``delta`` — the IVF certs' changed re-sends."""
+    return emb.filter(pred).select(
+        "vec_id",
+        F.transform(
+            F.col("embedding").cast("array<double>"),
+            lambda x: x + F.lit(delta),
+        ).alias("embedding"),
+    )
+
+
+def _ivf_query_vector(emb: DataFrame, delta: float) -> list[float]:
+    """vec 0's embedding shifted by ``delta``: the IVF certs' query
+    vector, its latest version (cosine 1.0 with itself)."""
+    row = emb.filter(F.col("vec_id") == 0).first()
+    return [float(x) + delta for x in row["embedding"]]
+
+
+def _ivf_replace_probes(
+    spark: SparkSession, path: str, qvec: list[float]
+) -> DataFrame:
+    """Full-probe top-10 ``pre``, replace-compact the store by vec_id,
+    top-10 ``post``: both phases as one (phase, vec_id, cosine) frame."""
+    from chicago_crime_spark_ml_spark.operators.similarity import (
+        compact_ivf_index,
+        probe_ivf_index,
+    )
+
+    pre = probe_ivf_index(spark, path, qvec, k=10, n_probe=8).collect()
+    compact_ivf_index(spark, path, replace_latest_by="vec_id")
+    post = probe_ivf_index(spark, path, qvec, k=10, n_probe=8).collect()
+    rows = [("pre", r.vec_id, r.cosine) for r in pre] + [
+        ("post", r.vec_id, r.cosine) for r in post
+    ]
+    return spark.createDataFrame(
+        rows, "phase string, vec_id long, cosine double"
+    ).orderBy(F.desc("phase"), F.desc("cosine"), F.asc("vec_id"))
 
 
 @query(
@@ -4003,36 +4135,27 @@ def streaming_compaction_span_check(
     with tempfile.TemporaryDirectory(
         prefix="stream_span_", ignore_cleanup_errors=True
     ) as root:
-        src = os.path.join(root, "src")
         post_path = os.path.join(root, "postings")
         dlen_path = os.path.join(root, "doclen")
-        ckpt = os.path.join(root, "ckpt")
-        os.makedirs(src)
 
-        def run_stream() -> None:
-            _drain_stream(
-                streaming_lexical_ingest(
-                    _replay_stream(spark, src, "doc_id BIGINT, text STRING"),
-                    post_path,
-                    dlen_path,
-                    ckpt,
-                )
-            )
-
-        def phase(n_docs: int, multi: bool, label: str) -> None:
-            _assert_span_phase(spark, dlen_path, n_docs, multi, label)
+        def compact() -> None:
+            for pth in (post_path, dlen_path):
+                compact_ingest_index(spark, pth, replace_latest_by="doc_id")
 
         n_docs = d.count()
-        _stage_span_batch(root, src, 0, batches[0])
-        _stage_span_batch(root, src, 1, batches[1])
-        run_stream()  # processes b0, b1; then the maintenance window
-        phase(n_docs, multi=True, label="pre-compaction")
-        for pth in (post_path, dlen_path):
-            compact_ingest_index(spark, pth, replace_latest_by="doc_id")
-        phase(n_docs, multi=False, label="post-compaction")
-        _stage_span_batch(root, src, 2, batches[2])
-        run_stream()  # resumes from the checkpoint: b2 only
-        phase(n_docs, multi=True, label="post-resume")
+        _span_run(
+            spark,
+            root,
+            batches,
+            "doc_id BIGINT, text STRING",
+            lambda stream, ckpt: streaming_lexical_ingest(
+                stream, post_path, dlen_path, ckpt
+            ),
+            compact,
+            lambda label: _assert_span_phase(
+                spark, dlen_path, n_docs, label != "post-compaction", label
+            ),
+        )
 
         def serve_latest() -> DataFrame:
             return bm25_search_from_index(
@@ -4055,9 +4178,8 @@ def streaming_compaction_span_check(
             )
 
         served = [(r.doc_id, r.bm25) for r in serve_latest().collect()]
-        for pth in (post_path, dlen_path):
-            compact_ingest_index(spark, pth, replace_latest_by="doc_id")
-        phase(n_docs, multi=False, label="final compaction")
+        compact()
+        _assert_span_phase(spark, dlen_path, n_docs, False, "final compaction")
         out = bm25_search_from_index(
             spark.read.parquet(post_path).drop("batch_id"),
             spark.read.parquet(dlen_path).drop("batch_id"),
@@ -4155,39 +4277,33 @@ def streaming_lsh_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(
         prefix="stream_lsh_span_", ignore_cleanup_errors=True
     ) as root:
-        src = os.path.join(root, "src")
         idx_path = os.path.join(root, "bands")
-        ckpt = os.path.join(root, "ckpt")
-        os.makedirs(src)
 
-        def run_stream() -> None:
-            _drain_stream(
-                streaming_near_dup_ingest(
-                    _replay_stream(spark, src, "doc_id BIGINT, text STRING"),
-                    idx_path,
-                    os.path.join(root, "pairs"),
-                    ckpt,
-                    num_hashes=32,
-                    band_width=2,
-                )
-            )
-
-        def phase(n_rows: int, multi: bool, label: str) -> None:
-            _assert_span_phase(spark, idx_path, n_rows, multi, label)
+        def compact() -> None:
+            compact_ingest_index(spark, idx_path, replace_latest_by="doc_id")
 
         want_idx = lsh_band_index(
             d, num_hashes=32, band_width=2
         ).localCheckpoint(eager=True)
         n_rows = want_idx.count()
-        _stage_span_batch(root, src, 0, batches[0])
-        _stage_span_batch(root, src, 1, batches[1])
-        run_stream()  # processes b0, b1; then the maintenance window
-        phase(n_rows, multi=True, label="pre-compaction")
-        compact_ingest_index(spark, idx_path, replace_latest_by="doc_id")
-        phase(n_rows, multi=False, label="post-compaction")
-        _stage_span_batch(root, src, 2, batches[2])
-        run_stream()  # resumes from the checkpoint: b2 only
-        phase(n_rows, multi=True, label="post-resume")
+        _span_run(
+            spark,
+            root,
+            batches,
+            "doc_id BIGINT, text STRING",
+            lambda stream, ckpt: streaming_near_dup_ingest(
+                stream,
+                idx_path,
+                os.path.join(root, "pairs"),
+                ckpt,
+                num_hashes=32,
+                band_width=2,
+            ),
+            compact,
+            lambda label: _assert_span_phase(
+                spark, idx_path, n_rows, label != "post-compaction", label
+            ),
+        )
         # r13: fold the fresh manifest into its sentinel pointer
         # partition — the serving read below must be unaffected
         compact_mv_manifest(spark, idx_path, "doc_id")
@@ -4208,8 +4324,8 @@ def streaming_lsh_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r.id_a, r.id_b, r.jaccard)
             for r in consume(served_idx).collect()
         }
-        compact_ingest_index(spark, idx_path, replace_latest_by="doc_id")
-        phase(n_rows, multi=False, label="final compaction")
+        compact()
+        _assert_span_phase(spark, idx_path, n_rows, False, "final compaction")
         idx = spark.read.parquet(idx_path).drop("batch_id")
         if not _same_rows(idx, want_idx):
             raise AssertionError(
@@ -7509,9 +7625,7 @@ def ivf_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     separately (ivf_compaction_check, ann_ivf_recall_check)."""
 
     from chicago_crime_spark_ml_spark.operators.similarity import (
-        compact_ivf_index,
         ivf_index_delta,
-        probe_ivf_index,
         write_ivf_index,
     )
 
@@ -7524,21 +7638,9 @@ def ivf_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_ivf_index(base, path, n_clusters=8)
         d1 = emb.filter(F.col("vec_id") % 5 == 0)
         ivf_index_delta(spark, path, d1, ingest_id="d1")
-        changed = emb.filter(F.col("vec_id") % 7 == 0).withColumn(
-            "embedding",
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda x: x + F.lit(0.5),
-            ),
-        )
+        changed = _shifted_vectors(emb, F.col("vec_id") % 7 == 0, 0.5)
         ivf_index_delta(spark, path, changed, ingest_id="d2")
-        qvec = [
-            float(x) + 0.5
-            for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
-        ]
-        pre = probe_ivf_index(spark, path, qvec, k=10, n_probe=8).collect()
-        compact_ivf_index(spark, path, replace_latest_by="vec_id")
-        post = probe_ivf_index(spark, path, qvec, k=10, n_probe=8).collect()
+        out = _ivf_replace_probes(spark, path, _ivf_query_vector(emb, 0.5))
         # physical replace: the stale versions are GONE, not shadowed
         store = spark.read.parquet(path)
         n_rows, n_ids, n_d2 = store.agg(
@@ -7563,20 +7665,8 @@ def ivf_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"every changed id must survive at the d2 seq: "
                 f"{n_d2} != {n_changed}"
             )
-        if not all(
-            os.listdir(os.path.join(path, c)) == ["ingest=__compacted__"]
-            for c in _partition_dirs(path, "cell=")
-        ):
-            raise AssertionError("cells not collapsed to the sentinel")
-        rows = [("pre", r.vec_id, r.cosine) for r in pre] + [
-            ("post", r.vec_id, r.cosine) for r in post
-        ]
-    return (
-        spark.createDataFrame(
-            rows, "phase string, vec_id long, cosine double"
-        )
-        .orderBy(F.desc("phase"), F.desc("cosine"), F.asc("vec_id"))
-    )
+        _assert_cells_compacted(path)
+    return out
 
 
 @query(
@@ -7628,105 +7718,72 @@ def streaming_ivf_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from chicago_crime_spark_ml_spark.operators.similarity import (
         compact_ivf_index,
-        probe_ivf_index,
         write_ivf_index,
     )
     from chicago_crime_spark_ml_spark.streaming import streaming_ivf_ingest
 
     emb = _t(spark, sf_dir, "embeddings")
     n_ids = emb.count()
-
-    def shifted(pred, delta):
-        return emb.filter(pred).select(
-            "vec_id",
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda x: x + F.lit(delta),
-            ).alias("embedding"),
-        )
-
+    n11 = emb.filter(F.col("vec_id") % 11 == 0).count()
     batches = (
         emb.filter(F.col("vec_id") % 5 == 0).select(
             "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        ),                                          # b0: the delta ids
-        shifted(F.col("vec_id") % 7 == 0, 0.5),     # b1: %7 changed
-        shifted(F.col("vec_id") % 11 == 0, 0.25),   # b2: %11 changed
+        ),                                                 # b0: delta ids
+        _shifted_vectors(emb, F.col("vec_id") % 7 == 0, 0.5),   # b1: %7
+        _shifted_vectors(emb, F.col("vec_id") % 11 == 0, 0.25),  # b2: %11
     )
     with tempfile.TemporaryDirectory(
         prefix="stream_ivf_span_", ignore_cleanup_errors=True
     ) as root:
-        src = os.path.join(root, "src")
         path = os.path.join(root, "ivf")
-        ckpt = os.path.join(root, "ckpt")
-        os.makedirs(src)
 
-        def run_stream() -> None:
-            stream = _replay_stream(
-                spark, src, "vec_id BIGINT, embedding ARRAY<DOUBLE>"
-            )
-            _drain_stream(streaming_ivf_ingest(stream, path, ckpt))
+        def check(label: str) -> None:
+            store = spark.read.parquet(path)
+            if label == "pre-compaction" and not store.count() > n_ids:
+                raise AssertionError(
+                    "changed re-sends must leave stale duplicate vectors"
+                )
+            if label == "post-compaction":
+                if store.count() != n_ids or store.select(
+                    "vec_id"
+                ).distinct().count() != n_ids:
+                    raise AssertionError(
+                        "replace-compaction must keep exactly one row per id"
+                    )
+                if _partition_dirs(path + "__seq", "ingest=") != [
+                    "ingest=__compacted__"
+                ]:
+                    raise AssertionError(
+                        "compaction must fold the seq registry into one "
+                        "sentinel partition"
+                    )
+                _assert_cells_compacted(path)
+            if label == "post-resume":
+                if store.count() != n_ids + n11:
+                    raise AssertionError(
+                        "the post-resume re-send must append its versions "
+                        "beside the compacted corpus"
+                    )
+                # the resumed batch's seq must sit ABOVE the folded
+                # history (base=0, batch-0=1, batch-1=2 → batch-2=3)
+                if store.agg(F.max("ingest_seq")).first()[0] != 3:
+                    raise AssertionError(
+                        "the registry must hand the resumed batch the next "
+                        "seq above the folded history"
+                    )
 
         write_ivf_index(emb.filter(F.col("vec_id") % 5 != 0), path, n_clusters=8)
-        _stage_span_batch(root, src, 0, batches[0])
-        _stage_span_batch(root, src, 1, batches[1])
-        run_stream()  # processes b0, b1; then the maintenance window
-        store = spark.read.parquet(path)
-        if not store.count() > n_ids:
-            raise AssertionError(
-                "changed re-sends must leave stale duplicate vectors"
-            )
-        compact_ivf_index(spark, path, replace_latest_by="vec_id")
-        store = spark.read.parquet(path)
-        if store.count() != n_ids or store.select(
-            "vec_id"
-        ).distinct().count() != n_ids:
-            raise AssertionError(
-                "replace-compaction must keep exactly one row per id"
-            )
-        if _partition_dirs(path + "__seq", "ingest=") != [
-            "ingest=__compacted__"
-        ]:
-            raise AssertionError(
-                "compaction must fold the seq registry into one "
-                "sentinel partition"
-            )
-        if not all(
-            os.listdir(os.path.join(path, c)) == ["ingest=__compacted__"]
-            for c in _partition_dirs(path, "cell=")
-        ):
-            raise AssertionError("cells not collapsed to the sentinel")
-        _stage_span_batch(root, src, 2, batches[2])
-        run_stream()  # resumes from the checkpoint: b2 only
-        n11 = emb.filter(F.col("vec_id") % 11 == 0).count()
-        store = spark.read.parquet(path)
-        if store.count() != n_ids + n11:
-            raise AssertionError(
-                "the post-resume re-send must append its versions "
-                "beside the compacted corpus"
-            )
-        # the resumed batch's seq must sit ABOVE the folded history
-        # (base=0, batch-0=1, batch-1=2 → batch-2=3)
-        if store.agg(F.max("ingest_seq")).first()[0] != 3:
-            raise AssertionError(
-                "the registry must hand the resumed batch the next "
-                "seq above the folded history"
-            )
-        qvec = [
-            float(x) + 0.25
-            for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
-        ]
-        pre = probe_ivf_index(spark, path, qvec, k=10, n_probe=8).collect()
-        compact_ivf_index(spark, path, replace_latest_by="vec_id")
-        post = probe_ivf_index(spark, path, qvec, k=10, n_probe=8).collect()
-        rows = [("pre", r.vec_id, r.cosine) for r in pre] + [
-            ("post", r.vec_id, r.cosine) for r in post
-        ]
-    return (
-        spark.createDataFrame(
-            rows, "phase string, vec_id long, cosine double"
+        _span_run(
+            spark,
+            root,
+            batches,
+            "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+            lambda stream, ckpt: streaming_ivf_ingest(stream, path, ckpt),
+            lambda: compact_ivf_index(spark, path, replace_latest_by="vec_id"),
+            check,
         )
-        .orderBy(F.desc("phase"), F.desc("cosine"), F.asc("vec_id"))
-    )
+        out = _ivf_replace_probes(spark, path, _ivf_query_vector(emb, 0.25))
+    return out
 
 
 @query(
@@ -13581,20 +13638,13 @@ def multimodal_image_near_dup_pairs(
     # pair set went genuinely quadratic (measured 4.9M rows); hashing
     # (f, r, c) makes distinct families hamming-far at ANY corpus size
     # while the planted even/odd pairs stay exact
-    base = lambda r, c: F.conv(  # noqa: E731
-        F.substring(F.md5(F.concat_ws("_", f, r, c)), 1, 2), 16, 10
-    ).cast("int")
-    pixels = F.transform(
-        F.sequence(F.lit(0), F.lit(15)),
-        lambda r: F.transform(
-            F.sequence(F.lit(0), F.lit(17)),
-            lambda c: F.when(
-                (F.col("doc_id") % 2 == 1) & (r == 1) & (c == 1),
-                (base(r, c) + 50) % 256,
-            )
-            .otherwise(base(r, c))
-            .cast("int"),
-        ),
+    pixels = _raster(
+        lambda r, c: F.when(
+            (F.col("doc_id") % 2 == 1) & (r == 1) & (c == 1),
+            (_md5_byte(f, r, c) + 50) % 256,
+        )
+        .otherwise(_md5_byte(f, r, c))
+        .cast("int")
     )
     blobs = synthesize_netpbm_blobs(docs.select("doc_id", pixels.alias("pixels")))
     return dhash_hamming_pairs(image_dhash(blobs), max_distance=3, band_bytes=2)
@@ -13663,37 +13713,8 @@ def multimodal_video_near_dup_pairs(
 
     docs = _doc_ids(spark, sf_dir)
     g = F.floor(F.col("doc_id") / F.lit(2))
-    frames = F.transform(
-        F.sequence(F.lit(0), F.lit(5)),
-        lambda fi: F.transform(
-            F.sequence(F.lit(0), F.lit(15)),
-            lambda r: F.transform(
-                F.sequence(F.lit(0), F.lit(17)),
-                lambda c: F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "_",
-                                g,
-                                F.when(
-                                    (F.col("doc_id") % 2 == 1) & (fi == 5),
-                                    F.lit("z"),
-                                ).otherwise(fi.cast("string")),
-                                r,
-                                c,
-                            )
-                        ),
-                        1,
-                        2,
-                    ),
-                    16,
-                    10,
-                ).cast("int"),
-            ),
-        ),
-    )
     blobs = synthesize_netpbm_stream_blobs(
-        docs.select("doc_id", frames.alias("frames"))
+        docs.select("doc_id", _video_frames(g).alias("frames"))
     )
     return video_near_dup_pairs(frame_stream_dhash(blobs), min_shared=4)
 
@@ -13735,8 +13756,6 @@ def frame_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from chicago_crime_spark_ml_spark.operators.multimodal import (
         frame_index_delta,
-        frame_stream_dhash,
-        synthesize_netpbm_stream_blobs,
     )
     from chicago_crime_spark_ml_spark.sources.io import (
         compact_ingest_index,
@@ -13745,62 +13764,24 @@ def frame_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _doc_ids(spark, sf_dir).filter(F.col("doc_id") % 8 < 2)
     g = F.floor(F.col("doc_id") / F.lit(2))
     is_a = F.col("doc_id") % 3 == 0
-
-    def frames_expr(with_junk: bool):
-        top = F.lit(6) if with_junk else F.lit(5)
-        lbl = lambda fi: (  # noqa: E731
-            F.when(
-                fi == 6,
-                F.concat(F.lit("x"), F.col("doc_id").cast("string")),
-            )
-            .when(
-                (F.col("doc_id") % 2 == 1) & (fi == 5), F.lit("z")
-            )
-            .otherwise(fi.cast("string"))
-        )
-        return F.transform(
-            F.sequence(F.lit(0), top),
-            lambda fi: F.transform(
-                F.sequence(F.lit(0), F.lit(15)),
-                lambda r: F.transform(
-                    F.sequence(F.lit(0), F.lit(17)),
-                    lambda c: F.conv(
-                        F.substring(
-                            F.md5(F.concat_ws("_", g, lbl(fi), r, c)), 1, 2
-                        ),
-                        16,
-                        10,
-                    ).cast("int"),
-                ),
-            ),
-        )
-
-    sig_of = lambda frame_docs: (  # noqa: E731
-        frame_stream_dhash(
-            synthesize_netpbm_stream_blobs(frame_docs)
-        )
-        .select("doc_id", "dhash")
-        .distinct()
-    )
+    true_docs = docs.select("doc_id", _video_frames(g).alias("frames"))
     v1 = docs.select(
-        "doc_id", frames_expr(False).alias("frames")
-    ).withColumn(
-        "frames",
-        F.when(
+        "doc_id",
+        _append_frame(
+            _video_frames(g),
             is_a,
-            frames_expr(True),
-        ).otherwise(F.col("frames")),
+            g,
+            F.concat(F.lit("x"), F.col("doc_id").cast("string")),
+        ).alias("frames"),
     )
     with tempfile.TemporaryDirectory(
         prefix="frame_compact_", ignore_cleanup_errors=True
     ) as root:
         idx_path = os.path.join(root, "frames")
-        sig_of(v1).write.mode("overwrite").parquet(f"{idx_path}/batch_id=0")
-        resend = sig_of(
-            docs.filter(is_a).select(
-                "doc_id", frames_expr(False).alias("frames")
-            )
+        _frame_sigs(v1).write.mode("overwrite").parquet(
+            f"{idx_path}/batch_id=0"
         )
+        resend = _frame_sigs(true_docs.filter(is_a))
         fresh, _ = frame_index_delta(
             spark.read.parquet(idx_path).drop("batch_id"), resend
         )
@@ -13813,8 +13794,7 @@ def frame_compact_replace_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         fresh.write.mode("overwrite").parquet(f"{idx_path}/batch_id=1")
         compact_ingest_index(spark, idx_path, replace_latest_by="doc_id")
         idx = spark.read.parquet(idx_path).drop("batch_id")
-        want = sig_of(docs.select("doc_id", frames_expr(False).alias("frames")))
-        if not _same_rows(idx, want):
+        if not _same_rows(idx, _frame_sigs(true_docs)):
             raise AssertionError(
                 "replace-compacted frame store must equal a rebuild over "
                 "the latest streams"
@@ -13855,7 +13835,6 @@ def streaming_frame_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical consumer output."""
 
     from chicago_crime_spark_ml_spark.operators.multimodal import (
-        frame_stream_dhash,
         synthesize_netpbm_stream_blobs,
     )
     from chicago_crime_spark_ml_spark.sources.io import (
@@ -13870,126 +13849,62 @@ def streaming_frame_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = F.floor(F.col("doc_id") / F.lit(2))
     is_a = F.col("doc_id") % 3 == 0
     is_b = F.col("doc_id") % 5 == 0
-
-    def frame_of(lbl):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(15)),
-            lambda r: F.transform(
-                F.sequence(F.lit(0), F.lit(17)),
-                lambda c: F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws("_", g, lbl, r, c)), 1, 2
-                    ),
-                    16,
-                    10,
-                ).cast("int"),
-            ),
-        )
-
-    def frames_expr(junk_a: bool, junk_b: bool):
-        base = F.transform(
-            F.sequence(F.lit(0), F.lit(5)),
-            lambda fi: F.transform(
-                F.sequence(F.lit(0), F.lit(15)),
-                lambda r: F.transform(
-                    F.sequence(F.lit(0), F.lit(17)),
-                    lambda c: F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat_ws(
-                                    "_",
-                                    g,
-                                    F.when(
-                                        (F.col("doc_id") % 2 == 1)
-                                        & (fi == 5),
-                                        F.lit("z"),
-                                    ).otherwise(fi.cast("string")),
-                                    r,
-                                    c,
-                                )
-                            ),
-                            1,
-                            2,
-                        ),
-                        16,
-                        10,
-                    ).cast("int"),
-                ),
-            ),
-        )
-        out = base
-        if junk_a:
-            jx = frame_of(
-                F.concat(F.lit("x"), F.col("doc_id").cast("string"))
-            )
-            out = F.when(is_a, F.concat(out, F.array(jx))).otherwise(out)
-        if junk_b:
-            jy = frame_of(
-                F.concat(F.lit("y"), F.col("doc_id").cast("string"))
-            )
-            out = F.when(is_b, F.concat(out, F.array(jy))).otherwise(out)
-        return out
-
-    def blobs_of(frame_docs: DataFrame) -> DataFrame:
-        return synthesize_netpbm_stream_blobs(frame_docs)
-
-    sig_of = lambda frame_docs: (  # noqa: E731
-        frame_stream_dhash(blobs_of(frame_docs))
-        .select("doc_id", "dhash")
-        .distinct()
+    true_docs = docs.select("doc_id", _video_frames(g).alias("frames"))
+    poisoned = _append_frame(
+        _append_frame(
+            _video_frames(g),
+            is_a,
+            g,
+            F.concat(F.lit("x"), F.col("doc_id").cast("string")),
+        ),
+        is_b,
+        g,
+        F.concat(F.lit("y"), F.col("doc_id").cast("string")),
     )
     batches = (
-        blobs_of(docs.select("doc_id", frames_expr(True, True).alias("frames"))),
-        blobs_of(
-            docs.filter(is_a).select(
-                "doc_id", frames_expr(False, False).alias("frames")
-            )
+        synthesize_netpbm_stream_blobs(
+            docs.select("doc_id", poisoned.alias("frames"))
         ),
-        blobs_of(
-            docs.filter(is_b).select(
-                "doc_id", frames_expr(False, False).alias("frames")
-            )
-        ),
+        synthesize_netpbm_stream_blobs(true_docs.filter(is_a)),
+        synthesize_netpbm_stream_blobs(true_docs.filter(is_b)),
     )
     with tempfile.TemporaryDirectory(
         prefix="stream_frame_span_", ignore_cleanup_errors=True
     ) as root:
-        src = os.path.join(root, "src")
         idx_path = os.path.join(root, "frames")
-        ckpt = os.path.join(root, "ckpt")
-        os.makedirs(src)
-
-        def run_stream() -> None:
-            _drain_stream(
-                streaming_media_near_dup_ingest(
-                    _replay_stream(spark, src, "doc_id BIGINT, blob BINARY"),
-                    idx_path,
-                    os.path.join(root, "pairs"),
-                    ckpt,
-                    modality="video",
-                    min_shared=4,
-                )
-            )
-
-        def phase(n_rows: int, multi: bool, label: str) -> None:
-            _assert_span_phase(spark, idx_path, n_rows, multi, label)
-
-        want_idx = sig_of(
-            docs.select("doc_id", frames_expr(False, False).alias("frames"))
-        ).localCheckpoint(eager=True)
+        want_idx = _frame_sigs(true_docs).localCheckpoint(eager=True)
         n_rows = want_idx.count()
         # after the FIRST compaction the %5-only docs' latest version
         # is still the poisoned one — one extra (junk-y) hash row each
         n_b_only = docs.filter(is_b & ~is_a).count()
-        _stage_span_batch(root, src, 0, batches[0])
-        _stage_span_batch(root, src, 1, batches[1])
-        run_stream()  # processes b0, b1; then the maintenance window
-        phase(n_rows, multi=True, label="pre-compaction")
-        compact_ingest_index(spark, idx_path, replace_latest_by="doc_id")
-        phase(n_rows + n_b_only, multi=False, label="post-compaction")
-        _stage_span_batch(root, src, 2, batches[2])
-        run_stream()  # resumes from the checkpoint: b2 only
-        phase(n_rows, multi=True, label="post-resume")
+
+        def compact() -> None:
+            compact_ingest_index(spark, idx_path, replace_latest_by="doc_id")
+
+        def check(label: str) -> None:
+            if label == "post-compaction":
+                _assert_span_phase(
+                    spark, idx_path, n_rows + n_b_only, False, label
+                )
+            else:
+                _assert_span_phase(spark, idx_path, n_rows, True, label)
+
+        _span_run(
+            spark,
+            root,
+            batches,
+            "doc_id BIGINT, blob BINARY",
+            lambda stream, ckpt: streaming_media_near_dup_ingest(
+                stream,
+                idx_path,
+                os.path.join(root, "pairs"),
+                ckpt,
+                modality="video",
+                min_shared=4,
+            ),
+            compact,
+            check,
+        )
         # the %15 ids were already true after b1 — the resumed batch
         # must classify them unchanged (dropped, not re-emitted)
         resent = spark.read.parquet(
@@ -14010,8 +13925,8 @@ def streaming_frame_span_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r.id_a, r.id_b, r.shared_frames)
             for r in _shared_frame_pairs(served_idx).collect()
         }
-        compact_ingest_index(spark, idx_path, replace_latest_by="doc_id")
-        phase(n_rows, multi=False, label="final compaction")
+        compact()
+        _assert_span_phase(spark, idx_path, n_rows, False, "final compaction")
         idx = spark.read.parquet(idx_path).drop("batch_id")
         if not _same_rows(idx, want_idx):
             raise AssertionError(
@@ -14117,21 +14032,11 @@ def multimodal_image_near_dup_clusters(
 
     docs = _doc_ids(spark, sf_dir)
     f = F.floor(F.col("doc_id") / F.lit(2))
-    base = lambda r, c: F.conv(  # noqa: E731
-        F.substring(F.md5(F.concat_ws("_", f, r, c)), 1, 2), 16, 10
-    ).cast("int")
-    even = F.transform(
-        F.sequence(F.lit(0), F.lit(15)),
-        lambda r: F.transform(
-            F.sequence(F.lit(0), F.lit(17)), lambda c: base(r, c)
-        ),
-    )
-    odd = F.transform(
-        F.sequence(F.lit(0), F.lit(31)),
-        lambda r: F.transform(
-            F.sequence(F.lit(0), F.lit(35)),
-            lambda c: base(F.floor(r / 2), F.floor(c / 2)),
-        ),
+    even = _raster(lambda r, c: _md5_byte(f, r, c))
+    odd = _raster(
+        lambda r, c: _md5_byte(f, F.floor(r / 2), F.floor(c / 2)),
+        rows=32,
+        cols=36,
     )
     pixels = F.when(F.col("doc_id") % 2 == 0, even).otherwise(odd)
     # blobs feed TWO consumers (dhash pipeline + meta decode): materialize
@@ -14250,27 +14155,9 @@ def multimodal_video_near_dup_clusters(
 
     docs = _doc_ids(spark, sf_dir)
     g = F.floor(F.col("doc_id") / F.lit(2))
-    odd = F.col("doc_id") % 2 == 1
-    lbl = lambda fi: (  # noqa: E731
-        F.when(odd & (fi == 5), F.lit("z"))
-        .when(odd & (fi == 6), F.lit("w"))
-        .otherwise(fi.cast("string"))
-    )
-    frames = F.transform(
-        F.sequence(F.lit(0), F.when(odd, F.lit(6)).otherwise(F.lit(5))),
-        lambda fi: F.transform(
-            F.sequence(F.lit(0), F.lit(15)),
-            lambda r: F.transform(
-                F.sequence(F.lit(0), F.lit(17)),
-                lambda c: F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws("_", g, lbl(fi), r, c)), 1, 2
-                    ),
-                    16,
-                    10,
-                ).cast("int"),
-            ),
-        ),
+    # odd twins: the standard stack ('z' last) plus a unique 'w' frame
+    frames = _append_frame(
+        _video_frames(g), F.col("doc_id") % 2 == 1, g, F.lit("w")
     )
     blobs = synthesize_netpbm_stream_blobs(
         docs.select("doc_id", frames.alias("frames"))
@@ -14370,18 +14257,7 @@ def multimodal_audio_near_dup_pairs(
 
     docs = _doc_ids(spark, sf_dir)
     f = F.floor(F.col("doc_id") / F.lit(2))
-    n = (F.lit(130) + (f % 3) * 65).cast("int")
-    samples = F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: (
-            F.conv(
-                F.substring(F.md5(F.concat_ws("_", f, i)), 1, 2), 16, 10
-            ).cast("int")
-            - 128
-        ).cast("double")
-        / 256.0,
-    )
-    base = docs.select("doc_id", samples.alias("samples"))
+    base = docs.select("doc_id", _audio_track(f).alias("samples"))
     wav = synthesize_wav_blobs(base.filter(F.col("doc_id") % 2 == 0))
     flac = synthesize_flac_blobs(base.filter(F.col("doc_id") % 2 == 1))
     blobs = wav.unionByName(flac)
@@ -14484,18 +14360,7 @@ def multimodal_audio_near_dup_clusters(
 
     docs = _doc_ids(spark, sf_dir)
     f = F.floor(F.col("doc_id") / F.lit(2))
-    n = (F.lit(130) + (f % 3) * 65).cast("int")
-    samples = F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: (
-            F.conv(
-                F.substring(F.md5(F.concat_ws("_", f, i)), 1, 2), 16, 10
-            ).cast("int")
-            - 128
-        ).cast("double")
-        / 256.0,
-    )
-    base = docs.select("doc_id", samples.alias("samples"))
+    base = docs.select("doc_id", _audio_track(f).alias("samples"))
     wav = synthesize_wav_blobs(base.filter(F.col("doc_id") % 2 == 0))
     flac = synthesize_flac_blobs(base.filter(F.col("doc_id") % 2 == 1))
     # blobs feed TWO consumers (fingerprint pipeline + codec audit):
@@ -14557,15 +14422,7 @@ def dhash_incremental_index_check(
 
     docs = _doc_ids(spark, sf_dir)
     f = F.floor(F.col("doc_id") / F.lit(2))
-    base = lambda r, c: F.conv(  # noqa: E731
-        F.substring(F.md5(F.concat_ws("_", f, r, c)), 1, 2), 16, 10
-    ).cast("int")
-    pixels = F.transform(
-        F.sequence(F.lit(0), F.lit(15)),
-        lambda r: F.transform(
-            F.sequence(F.lit(0), F.lit(17)), lambda c: base(r, c)
-        ),
-    )
+    pixels = _raster(lambda r, c: _md5_byte(f, r, c))
     blobs = synthesize_netpbm_blobs(
         docs.select("doc_id", pixels.alias("pixels"))
     )
@@ -14615,37 +14472,8 @@ def video_frame_incremental_index_check(
 
     docs = _doc_ids(spark, sf_dir)
     g = F.floor(F.col("doc_id") / F.lit(2))
-    frames = F.transform(
-        F.sequence(F.lit(0), F.lit(5)),
-        lambda fi: F.transform(
-            F.sequence(F.lit(0), F.lit(15)),
-            lambda r: F.transform(
-                F.sequence(F.lit(0), F.lit(17)),
-                lambda c: F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "_",
-                                g,
-                                F.when(
-                                    (F.col("doc_id") % 2 == 1) & (fi == 5),
-                                    F.lit("z"),
-                                ).otherwise(fi.cast("string")),
-                                r,
-                                c,
-                            )
-                        ),
-                        1,
-                        2,
-                    ),
-                    16,
-                    10,
-                ).cast("int"),
-            ),
-        ),
-    )
     blobs = synthesize_netpbm_stream_blobs(
-        docs.select("doc_id", frames.alias("frames"))
+        docs.select("doc_id", _video_frames(g).alias("frames"))
     )
     sig = frame_stream_dhash(blobs).localCheckpoint(eager=True)
     old = sig.filter(F.col("doc_id") % 5 != 0)
@@ -14933,15 +14761,7 @@ def media_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _doc_ids(spark, sf_dir)
     bad = F.col("doc_id") % 7 == 3
     f = F.floor(F.col("doc_id") / F.lit(2))
-    base = lambda r, c: F.conv(  # noqa: E731
-        F.substring(F.md5(F.concat_ws("_", f, r, c)), 1, 2), 16, 10
-    ).cast("int")
-    pixels = F.transform(
-        F.sequence(F.lit(0), F.lit(15)),
-        lambda r: F.transform(
-            F.sequence(F.lit(0), F.lit(17)), lambda c: base(r, c)
-        ),
-    )
+    pixels = _raster(lambda r, c: _md5_byte(f, r, c))
     good = synthesize_netpbm_blobs(
         docs.filter(~bad).select("doc_id", pixels.alias("pixels"))
     )
@@ -14998,31 +14818,12 @@ def _funnel_multimodal_blobs(
     bad = F.col("doc_id") % 7 == 3
     is_img = F.col("doc_id") % 2 == 0
     fam = F.floor(F.col("doc_id") / F.lit(4))
-    base = lambda r, c: F.conv(  # noqa: E731
-        F.substring(F.md5(F.concat_ws("_", fam, r, c)), 1, 2), 16, 10
-    ).cast("int")
-    pixels = F.transform(
-        F.sequence(F.lit(0), F.lit(15)),
-        lambda r: F.transform(
-            F.sequence(F.lit(0), F.lit(17)), lambda c: base(r, c)
-        ),
-    )
+    pixels = _raster(lambda r, c: _md5_byte(fam, r, c))
     img_good = synthesize_netpbm_blobs(
         docs.filter(is_img & ~bad).select("doc_id", pixels.alias("pixels"))
     )
-    n = (F.lit(130) + (fam % 3) * 65).cast("int")
-    samples = F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: (
-            F.conv(
-                F.substring(F.md5(F.concat_ws("_", fam, i)), 1, 2), 16, 10
-            ).cast("int")
-            - 128
-        ).cast("double")
-        / 256.0,
-    )
     aud_base = docs.filter(~is_img & ~bad).select(
-        "doc_id", samples.alias("samples")
+        "doc_id", _audio_track(fam).alias("samples")
     )
     wav = synthesize_wav_blobs(aud_base.filter(F.col("doc_id") % 4 == 1))
     flac = synthesize_flac_blobs(aud_base.filter(F.col("doc_id") % 4 == 3))

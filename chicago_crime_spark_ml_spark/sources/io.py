@@ -573,14 +573,15 @@ def merge_parquet(
     as anti-join + unionByName + staged rewrite + directory swap.
 
     This is the table-format-less fallback: plain parquet has no ACID
-    merge, so the whole dataset rewrites (staging dir keeps readers
-    consistent until the atomic-ish rename). At 100 TB you'd use an
-    Iceberg/Delta MERGE for file-level pruning and snapshot isolation —
-    this helper exists so pipelines have correct upsert semantics on
-    bare parquet, and partition-scoped callers can point ``path`` at one
-    partition directory to bound the rewrite."""
-    import shutil  # noqa: PLC0415
-
+    merge, so the whole dataset rewrites into a staging dir and swaps
+    in through the crash-safe rename-aside (commit_compaction_swap);
+    a merge that crashed mid-swap is repaired first
+    (recover_compaction_swap). At 100 TB you'd use an Iceberg/Delta
+    MERGE for file-level pruning and snapshot isolation — this helper
+    exists so pipelines have correct upsert semantics on bare parquet,
+    and partition-scoped callers can point ``path`` at one partition
+    directory to bound the rewrite."""
+    recover_compaction_swap(path)
     tgt = spark.read.parquet(path)
     keep = tgt.join(
         F.broadcast(updates.select(*keys).distinct()), keys, "left_anti"
@@ -588,8 +589,7 @@ def merge_parquet(
     merged = keep.unionByName(updates.select(*tgt.columns))
     staging = path.rstrip("/") + "__staging"
     merged.write.mode("overwrite").parquet(staging)
-    shutil.rmtree(path)
-    shutil.move(staging, path)
+    commit_compaction_swap(path, staging)
 
 
 def merge_parquet_partitioned(

@@ -236,11 +236,15 @@ def incremental_rollup_to_parquet(
     overwrite mode so a replayed first batch lands idempotently."""
     from chicago_crime_spark_ml_spark.sources.io import (  # noqa: PLC0415
         merge_parquet,
+        recover_compaction_swap,
         try_read_parquet,
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        # a merge that crashed mid-swap must read as the table, not as
+        # "no table" (the initial-write branch would overwrite history)
+        recover_compaction_swap(path)
         if try_read_parquet(spark, path) is not None:
             merge_parquet(spark, path, batch_df, keys)
         else:

@@ -234,6 +234,35 @@ def test_merge_parquet_upsert(spark, tmp_path):
     assert got == {1: ("a", 1.0), 2: ("B", 20.0), 3: ("c", 3.0), 4: ("d", 4.0)}
 
 
+def test_merge_parquet_recovers_crashed_swap(spark, tmp_path):
+    """A merge that crashed mid-swap leaves ``path__old``; the next merge
+    must repair it first. Crash between the renames (live path missing):
+    the old rows come back and merge with the updates. Crash during the
+    final delete (both present): the leftover ``__old`` is removed."""
+    import os
+
+    from chicago_crime_spark_ml_spark.sources.io import merge_parquet
+
+    schema = "k BIGINT, s STRING"
+    table = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], schema)
+    updates = spark.createDataFrame([(2, "B"), (4, "d")], schema)
+    want = {1: "a", 2: "B", 3: "c", 4: "d"}
+
+    path = str(tmp_path / "between_renames")
+    table.write.parquet(path)
+    os.rename(path, path + "__old")
+    merge_parquet(spark, path, updates, keys=["k"])
+    assert {r.k: r.s for r in spark.read.parquet(path).collect()} == want
+    assert not os.path.exists(path + "__old")
+
+    path = str(tmp_path / "final_delete")
+    table.write.parquet(path)
+    spark.createDataFrame([(9, "stale")], schema).write.parquet(path + "__old")
+    merge_parquet(spark, path, updates, keys=["k"])
+    assert {r.k: r.s for r in spark.read.parquet(path).collect()} == want
+    assert not os.path.exists(path + "__old")
+
+
 def test_read_text_corpus_line_and_wholefile(spark, tmp_path):
     from chicago_crime_spark_ml_spark.sources.io import read_text_corpus
 

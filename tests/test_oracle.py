@@ -89,8 +89,9 @@ def test_rows_only_queries_execute(spark, name):
 
 def test_query_bodies_raise_instead_of_assert():
     # an in-query ``assert`` vanishes under ``python -O``, so a cert
-    # would pass the very store it exists to reject: every @query
-    # check must raise explicitly
+    # would pass the very store it exists to reject: every check must
+    # raise explicitly — in the @query bodies and equally in the helpers
+    # and closures they delegate their checks to
     import ast
     import inspect
 
@@ -101,15 +102,56 @@ def test_query_bodies_raise_instead_of_assert():
         fn.name
         for fn in ast.walk(tree)
         if isinstance(fn, ast.FunctionDef)
-        and any(
-            isinstance(dec, ast.Call)
-            and isinstance(dec.func, ast.Name)
-            and dec.func.id == "query"
-            for dec in fn.decorator_list
-        )
         and any(isinstance(node, ast.Assert) for node in ast.walk(fn))
     ]
     assert asserting == []
+
+
+def test_span_run_stages_compacts_and_resumes_in_order(monkeypatch, tmp_path):
+    # the span certs' maintenance window, pinned without Spark: b0 and b1
+    # are drained before the first check, compaction sits between the
+    # pre/post checks, and b2 resumes on the SAME checkpoint
+    import chicago_crime_spark_ml_spark.queries as queries
+
+    calls, ckpts = [], []
+    monkeypatch.setattr(
+        queries,
+        "_stage_span_batch",
+        lambda root, src, i, frame: calls.append(("stage", i, frame)),
+    )
+    monkeypatch.setattr(
+        queries, "_replay_stream", lambda spark, src, schema: (src, schema)
+    )
+    monkeypatch.setattr(
+        queries, "_drain_stream", lambda q: calls.append(("drain", q))
+    )
+
+    def start(stream, ckpt):
+        ckpts.append(ckpt)
+        return ("query", ckpt)
+
+    queries._span_run(
+        None,
+        str(tmp_path),
+        ("b0", "b1", "b2"),
+        "doc_id BIGINT",
+        start,
+        lambda: calls.append(("compact",)),
+        lambda label: calls.append(("check", label)),
+    )
+    assert len(ckpts) == 2 and ckpts[0] == ckpts[1]
+    drain = ("drain", ("query", ckpts[0]))
+    assert calls == [
+        ("stage", 0, "b0"),
+        ("stage", 1, "b1"),
+        drain,
+        ("check", "pre-compaction"),
+        ("compact",),
+        ("check", "post-compaction"),
+        ("stage", 2, "b2"),
+        drain,
+        ("check", "post-resume"),
+    ]
 
 
 @pytest.mark.parametrize(

@@ -427,21 +427,6 @@ def test_transform_with_state_equals_batch(spark, sf_dir):
     assert stream == batch
 
 
-def test_map_in_arrow_equals_pandas_path(spark, sf_dir):
-    from chicago_crime_spark_ml_spark.operators.multimodal import (
-        attach_blob,
-        extract_features,
-        extract_features_arrow,
-    )
-
-    d = attach_blob(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    pandas_path = {r.doc_id: (r.n_bytes, r.features)
-                   for r in extract_features(d).collect()}
-    arrow_path = {r.doc_id: (r.n_bytes, r.features)
-                  for r in extract_features_arrow(d).collect()}
-    assert pandas_path == arrow_path and len(arrow_path) > 0
-
-
 def test_stream_static_enrichment_equals_batch(spark, sf_dir):
     # stream-static join: per-user batch features attached to the event
     # stream must equal the same join done in batch — map-only (broadcast

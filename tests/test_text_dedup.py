@@ -162,19 +162,6 @@ def test_ann_ivf_exact_when_full_probe_and_recall_when_pruned(emb):
     assert recall >= 0.5, recall    # its cell is probed first
 
 
-def test_pandas_udf_cosine_equals_jvm_expression(emb):
-    from chicago_crime_spark_ml_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_pandas,
-    )
-
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    jvm = [(r.vec_id, r.cosine) for r in cosine_topk(emb, qvec, k=10).collect()]
-    py = [(r.vec_id, r.cosine)
-          for r in cosine_topk_pandas(emb, qvec, k=10).collect()]
-    assert jvm == py
-
-
 def test_connected_components_crafted_graph(spark):
     from chicago_crime_spark_ml_spark.operators.dedup import connected_components
 
