@@ -130,6 +130,25 @@ _REWRITTEN_GREENS = [
     # earned green r13 rows on the new impls and dropped; the r13-opt /
     # r14 optimization-rewritten paths below have no driver row on the
     # code that now ships: VERDICT r13 #5 requires fronting them)
+    # the embedding family moved onto one blocked-BLAS candidate core
+    # and one probe/top-k path in operators/similarity.py (block build,
+    # unit-row kernel, exact rescore, query literal, top-k tail, cell
+    # ranking, k-means fit); the ivf_* certs run it too
+    "ann_cosine_top10",
+    "embedding_near_dup_pairs",
+    "embedding_near_dup_delta",
+    "embedding_dedup_incremental",
+    "ann_quantized_top10",
+    "ann_lsh_recall_check",
+    "ann_ivf_recall_check",
+    "ann_quantized_agreement_check",
+    "embedding_blocked_exact_parity",
+    "embedding_batch_topk",
+    "als_topk_serving_agreement",
+    "ivf_delta_assignment_check",
+    "ivf_compaction_check",
+    "ivf_compact_replace_check",
+    "streaming_ivf_span_check",
     # the near-dup family moved onto one candidate core in
     # operators/dedup.py (occupancy guard, cell self-join, set-Jaccard
     # rescore); the minhash/ngram/video/delta names below run it too
@@ -152,9 +171,6 @@ _REWRITTEN_GREENS = [
     # the certs moved onto the shared scratch-store / stream-replay /
     # frame-equality helpers in queries.py (the streaming_* and *_check
     # names below are certs too)
-    "ivf_compaction_check",
-    "ivf_compact_replace_check",
-    "streaming_ivf_span_check",
     "cc_labels_upsert_check",
     "cc_incremental_check",
     # the delta-index family moved onto one shared re-send classifier

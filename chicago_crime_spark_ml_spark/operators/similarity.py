@@ -20,11 +20,30 @@ construction).
 
 from __future__ import annotations
 
+import glob
+import os
 import re
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from chicago_crime_spark_ml_spark.sources.io import (
+    commit_compaction_swap,
+    recover_compaction_swap,
+    try_read_parquet,
+)
+
+# BLAS-vs-fold summation drift allowance of the blocked near-dup
+# candidate cut (threshold − margin): wide enough that every pair the
+# exact rescore keeps is a candidate.
+NEAR_DUP_MARGIN = 1e-3
+# Delta-side block count of near_dup_delta_blocked (deltas are small).
+N_DELTA_BLOCKS = 4
+# Extra local candidates per (query, corpus-block) in cosine_topk_batch:
+# each absorbs one BLAS-vs-fold rounding-boundary flip.
+TOPK_PAD = 8
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -57,6 +76,34 @@ def cosine_expr(a: Column, b: Column) -> Column:
     )
 
 
+def _query_lit(query_vec: Sequence[float]) -> Column:
+    """The query vector as a float64 array literal baked into the plan
+    (no join, no broadcast)."""
+    return F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
+
+
+def _top_k(scored: DataFrame, id_col: str, k: int) -> DataFrame:
+    """The top-k tail every single-query path shares: (cosine desc, id
+    asc) — TakeOrderedAndProject keeps the top-k per partition then
+    merges on the driver, no full sort at any scale."""
+    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+
+
+def _nearest_cells(query_vec: Sequence[float], centers, n_probe: int) -> list[int]:
+    """The ``n_probe`` cell ids whose centroids are most cosine-similar
+    to the query, best first, ties to the lowest cell id. ``centers``
+    is a sequence of (cell, center) pairs — bounded: n_clusters rows."""
+    import numpy as np  # noqa: PLC0415
+
+    q = np.asarray(list(query_vec), dtype=float)
+
+    def sim(c) -> float:
+        return float(np.dot(q, c) / (np.linalg.norm(q) * np.linalg.norm(c) + 1e-12))
+
+    ranked = sorted((-sim(center), int(cell)) for cell, center in centers)
+    return [cell for _, cell in ranked[:n_probe]]
+
+
 def cosine_topk(
     df: DataFrame,
     query_vec: Sequence[float],
@@ -64,20 +111,11 @@ def cosine_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact brute-force cosine top-k for one query vector.
-
-    The query is a literal array baked into the plan (no join, no
-    broadcast needed); compute is float64 regardless of storage type.
-    TakeOrderedAndProject keeps the top-k per partition then merges on
-    the driver — no full sort at any scale.
-    """
-    q = F.array(*[F.lit(float(v)) for v in query_vec]).cast("array<double>")
-    v = F.col(vec_col).cast("array<double>")
-    score = cosine_expr(v, q)
-    return (
-        df.select(F.col(id_col), F.round(score, 4).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
+    """Exact brute-force cosine top-k for one query vector (_query_lit,
+    _top_k); compute is float64 regardless of storage type."""
+    score = cosine_expr(F.col(vec_col).cast("array<double>"), _query_lit(query_vec))
+    return _top_k(
+        df.select(F.col(id_col), F.round(score, 4).alias("cosine")), id_col, k
     )
 
 
@@ -181,42 +219,84 @@ def ann_ivf_topk(
     a probe reads n_probe/n_clusters of the data — partition pruning does
     the work. ``n_probe == n_clusters`` degenerates to exact brute force
     (asserted in tests). Centroids are driver-side (n_clusters rows — a
-    bounded collect); assignment and scoring are distributed.
+    bounded collect); assignment and scoring are distributed. The fit
+    is write_ivf_index's (_kmeans_base_assign).
     """
-    import numpy as np  # noqa: PLC0415
-    from pyspark.ml.clustering import KMeans  # noqa: PLC0415
-    from pyspark.ml.functions import array_to_vector  # noqa: PLC0415
-
-    vecs = df.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).withColumn("feat", array_to_vector("v"))
-    # KMeans.fit is iterative (maxIter scans); cache the projected input
-    # for the fit, release after — the returned (lazy) query re-reads the
-    # source once at execution instead of holding cache for the session
-    vecs = vecs.persist()
-    km = KMeans(k=n_clusters, seed=seed, featuresCol="feat", predictionCol="cell")
-    model = km.fit(vecs)
-    assigned = model.transform(vecs)
-
-    q = np.asarray(list(query_vec), dtype=float)
-    centers = model.clusterCenters()
-    sims = [
-        float(np.dot(q, c) / (np.linalg.norm(q) * np.linalg.norm(c) + 1e-12))
-        for c in centers
-    ]
-    probes = [
-        int(i)
-        for i in sorted(range(len(sims)), key=lambda i: -sims[i])[:n_probe]
-    ]
+    assigned, centers, vecs = _kmeans_base_assign(
+        df, n_clusters, vec_col, id_col, seed
+    )
+    probes = _nearest_cells(query_vec, centers, n_probe)
     vecs.unpersist()  # fit is done; the lazy probe query rescans once
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
-    score = cosine_expr(F.col("v"), qcol)
+    score = cosine_expr(F.col("v"), _query_lit(query_vec))
+    return _top_k(
+        assigned.filter(F.col("cell").isin(probes)).select(
+            F.col(id_col), F.round(score, 4).alias("cosine")
+        ),
+        id_col,
+        k,
+    )
+
+
+def _vector_blocks(df: DataFrame, vec_col: str, id_col: str, n: int) -> DataFrame:
+    """Group the non-NULL vectors into ``n`` id-hashed blocks, one
+    (_bid, _ids, _vecs) row each — the block build of every blocked-BLAS
+    operator. NULL vectors are dropped BEFORE the aggregation: the two
+    parallel collect_lists see rows in the same order, but collect_list
+    skips NULL values per-column — one NULL embedding would silently
+    misalign ids against vectors for its whole block. (A NULL can't be
+    a near-dup or a neighbor of anything anyway.) RAW vectors are
+    shipped; normalization is one vectorized numpy divide
+    (_unit_rows) — a JVM-side transform(x → x/norm(v)) re-evaluates the
+    norm fold PER ELEMENT (interpreted higher-order functions, no CSE):
+    O(d²) per vector, measured ~10 s of pure normalization on 20k×64
+    vectors at sf1."""
     return (
-        assigned.filter(F.col("cell").isin(probes))
-        .select(F.col(id_col), F.round(score, 4).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
+        df.filter(F.col(vec_col).isNotNull())
+        .select(
+            F.col(id_col).alias("_id"),
+            F.col(vec_col).cast("array<double>").alias("_u"),
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n)).alias("_bid"),
+        )
+        .groupBy("_bid")
+        .agg(
+            F.collect_list("_id").alias("_ids"),
+            F.collect_list("_u").alias("_vecs"),
+        )
+    )
+
+
+def _unit_rows(rows):
+    """A block's vectors as one numpy matrix of unit rows. Zero-norm
+    rows divide by inf: they score cosine 0 against everything (the
+    coalesce in cosine_expr), so they never pair and never outrank."""
+    import numpy as np  # noqa: PLC0415
+
+    m = np.array([np.asarray(r) for r in rows])
+    n = np.linalg.norm(m, axis=1)
+    n[n == 0] = np.inf
+    return m / n[:, None]
+
+
+def _rescore_pairs(
+    cand: DataFrame,
+    vectors: DataFrame,
+    vec_col: str,
+    id_col: str,
+    threshold: float,
+) -> DataFrame:
+    """Re-score candidate (id_a, id_b) pairs with the same float64
+    dot/norm Column algebra as the exact path on the ORIGINAL
+    ``vectors``, keeping those at cosine ≥ ``threshold`` — a surviving
+    pair carries exactly the score the all-pairs form would emit."""
+    v = F.col(vec_col).cast("array<double>")
+    sa = vectors.select(F.col(id_col).alias("id_a"), v.alias("_va"))
+    sb = vectors.select(F.col(id_col).alias("id_b"), v.alias("_vb"))
+    cos = cosine_expr(F.col("_va"), F.col("_vb"))
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select("id_a", "id_b", F.round(cos, 4).alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
     )
 
 
@@ -235,13 +315,7 @@ def _block_pair_gen(cut: float):
             for xids, xv, yids, yv in zip(
                 pdf["xids"], pdf["xv"], pdf["yids"], pdf["yv"]
             ):
-                X = np.array([np.asarray(r) for r in xv])
-                Y = np.array([np.asarray(r) for r in yv])
-                xn = np.linalg.norm(X, axis=1)
-                yn = np.linalg.norm(Y, axis=1)
-                xn[xn == 0] = np.inf  # zero vectors: cosine 0, never pair
-                yn[yn == 0] = np.inf
-                S = (X / xn[:, None]) @ (Y / yn[:, None]).T
+                S = _unit_rows(xv) @ _unit_rows(yv).T
                 ii, jj = np.nonzero(S >= cut)
                 xa = np.asarray(xids)[ii]
                 yb = np.asarray(yids)[jj]
@@ -263,7 +337,6 @@ def near_dup_pairs_blocked(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     n_blocks: int = 16,
-    margin: float = 1e-3,
 ) -> DataFrame:
     """Exact all-pairs cosine ≥ threshold via BLOCKED matrix multiply —
     the scale form of embedding_near_dup_pairs, output values
@@ -281,48 +354,23 @@ def near_dup_pairs_blocked(
 
     Three-phase, fully distributed (no driver collect, no broadcast of
     the corpus):
-    1. unit-normalize JVM-side; assign each vector to one of
-       ``n_blocks`` blocks by id hash; collect_list each block into ONE
-       row (ids array + vectors matrix) — shuffle O(n·d).
+    1. assign each vector to one of ``n_blocks`` blocks by id hash;
+       collect_list each block into ONE row (ids array + vectors
+       matrix) — shuffle O(n·d) (_vector_blocks).
     2. block-pair cross join (bid_x ≤ bid_y: B(B+1)/2 bounded rows — a
        declared dim×dim nested-loop join) → mapInPandas computes each
        m×m' cosine block with ONE numpy matmul (BLAS) and emits only
-       candidate pairs above threshold − margin. Compute O(n²d/B²) per
-       task; tune B ∝ n so a block matrix stays ~executor-cache-sized.
+       candidate pairs above threshold − NEAR_DUP_MARGIN. Compute
+       O(n²d/B²) per task; tune B ∝ n so a block matrix stays
+       ~executor-cache-sized.
        This is the documented Python-boundary exception for embedding
        math (Arrow-batched, vectorized — never per-row).
-    3. candidates (tiny) are re-scored with the same float64 dot/norm
-       Column algebra as the exact path on the ORIGINAL vectors, so a
-       surviving pair carries exactly the score the all-pairs form
-       would emit — precision 1.0 AND recall 1.0 by construction (every
-       pair is examined; margin covers BLAS-vs-fold summation-order
-       drift at the threshold boundary).
+    3. candidates (tiny) are re-scored exactly (_rescore_pairs) —
+       precision 1.0 AND recall 1.0 by construction (every pair is
+       examined; the margin covers BLAS-vs-fold summation-order drift
+       at the threshold boundary).
     """
-    v = F.col(vec_col).cast("array<double>")
-    blocks = (
-        # NULL vectors are dropped BEFORE the block aggregation: the two
-        # parallel collect_lists see rows in the same order, but
-        # collect_list skips NULL values per-column — one NULL embedding
-        # would silently misalign ids against vectors for its whole
-        # block. (A NULL can't be a near-dup of anything anyway.)
-        # RAW vectors are shipped; normalization happens in numpy inside
-        # gen() (one vectorized divide) — a JVM-side
-        # transform(x → x/norm(v)) re-evaluates the norm fold PER
-        # ELEMENT (interpreted higher-order functions, no CSE): O(d²)
-        # per vector, measured ~10 s of pure normalization on 20k×64
-        # vectors at sf1.
-        df.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("_id"),
-            v.alias("_u"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("_bid"),
-        )
-        .groupBy("_bid")
-        .agg(
-            F.collect_list("_id").alias("_ids"),
-            F.collect_list("_u").alias("_vecs"),
-        )
-    )
+    blocks = _vector_blocks(df, vec_col, id_col, n_blocks)
     x, y = blocks.alias("x"), blocks.alias("y")
     pairs_of_blocks = x.join(
         y, F.col("x._bid") <= F.col("y._bid")
@@ -335,26 +383,10 @@ def near_dup_pairs_blocked(
         F.col("y._vecs").alias("yv"),
     )
     cand = pairs_of_blocks.mapInPandas(
-        _block_pair_gen(threshold - margin), schema="id_a BIGINT, id_b BIGINT"
+        _block_pair_gen(threshold - NEAR_DUP_MARGIN),
+        schema="id_a BIGINT, id_b BIGINT",
     ).distinct()
-    sa = df.select(
-        F.col(id_col).alias("id_a"), v.alias("_va")
-    )
-    sb = df.select(
-        F.col(id_col).alias("id_b"), v.alias("_vb")
-    )
-    cos = cosine_expr(F.col("_va"), F.col("_vb"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", F.round(cos, 4).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
-# Back-compat alias: the former BucketedRandomProjection implementation
-# is superseded (see near_dup_pairs_blocked docstring for measurements).
-near_dup_pairs_lsh_exact = near_dup_pairs_blocked
+    return _rescore_pairs(cand, df, vec_col, id_col, threshold)
 
 
 def near_dup_delta_blocked(
@@ -364,8 +396,6 @@ def near_dup_delta_blocked(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     n_blocks: int = 16,
-    n_delta_blocks: int = 4,
-    margin: float = 1e-3,
 ) -> DataFrame:
     """Incremental embedding near-dup pairs — the DELTA form of
     :func:`near_dup_pairs_blocked`, completing incremental dedup for
@@ -388,26 +418,12 @@ def near_dup_delta_blocked(
     rather than self-cancelling — callers that replay batches should
     anti-join delta ids against the corpus first or overwrite
     per-batch outputs like the streaming sinks."""
-    v = F.col(vec_col).cast("array<double>")
-
-    def blocks_of(frame: DataFrame, n: int, tag: str) -> DataFrame:
-        return (
-            frame.filter(F.col(vec_col).isNotNull())
-            .select(
-                F.col(id_col).alias("_id"),
-                v.alias("_u"),
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(n)).alias("_bid"),
-            )
-            .groupBy("_bid")
-            .agg(
-                F.collect_list("_id").alias("_ids"),
-                F.collect_list("_u").alias("_vecs"),
-            )
-            .select(F.lit(tag).alias("_side"), "_bid", "_ids", "_vecs")
-        )
-
-    cb = blocks_of(corpus, n_blocks, "c")
-    db = blocks_of(new_df, n_delta_blocks, "d")
+    cb = _vector_blocks(corpus, vec_col, id_col, n_blocks).select(
+        F.lit("c").alias("_side"), "*"
+    )
+    db = _vector_blocks(new_df, vec_col, id_col, N_DELTA_BLOCKS).select(
+        F.lit("d").alias("_side"), "*"
+    )
     x = db.alias("x")
     y = cb.unionByName(db).alias("y")
     # delta × corpus: every combination; delta × delta: bid_x ≤ bid_y
@@ -423,20 +439,13 @@ def near_dup_delta_blocked(
         F.col("y._vecs").alias("yv"),
     )
     cand = pairs_of_blocks.mapInPandas(
-        _block_pair_gen(threshold - margin), schema="id_a BIGINT, id_b BIGINT"
+        _block_pair_gen(threshold - NEAR_DUP_MARGIN),
+        schema="id_a BIGINT, id_b BIGINT",
     ).distinct()
-    allv = corpus.select(F.col(id_col), v.alias("_v")).unionByName(
-        new_df.select(F.col(id_col), v.alias("_v"))
+    vectors = corpus.select(id_col, vec_col).unionByName(
+        new_df.select(id_col, vec_col)
     )
-    sa = allv.select(F.col(id_col).alias("id_a"), F.col("_v").alias("_va"))
-    sb = allv.select(F.col(id_col).alias("id_b"), F.col("_v").alias("_vb"))
-    cos = cosine_expr(F.col("_va"), F.col("_vb"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", F.round(cos, 4).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
+    return _rescore_pairs(cand, vectors, vec_col, id_col, threshold)
 
 
 def quantize_embeddings(
@@ -491,15 +500,14 @@ def cosine_topk_quantized(
     cancel in cosine, so scores are computed directly on the int8 codes
     widened to double. Same TakeOrdered plan as the float path at a
     quarter of the scan bytes."""
-    qcol = F.col(q_col)
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    widened = F.transform(qcol, lambda x: x.cast("double"))
-    score = cosine_expr(widened, qv)
-    return (
-        df.select(id_col, F.round(score, 6).alias("cosine"))
-        .filter(F.col("cosine").isNotNull())
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
+    widened = F.transform(F.col(q_col), lambda x: x.cast("double"))
+    score = cosine_expr(widened, _query_lit(query_vec))
+    return _top_k(
+        df.select(id_col, F.round(score, 6).alias("cosine")).filter(
+            F.col("cosine").isNotNull()
+        ),
+        id_col,
+        k,
     )
 
 
@@ -556,8 +564,8 @@ def write_ivf_index(
 def _kmeans_base_assign(df, n_clusters, vec_col, id_col, seed):
     """Fit k-means and assign every vector to its cell as a BASE build
     (ingest_seq 0, ingest 'base'). Returns (assigned frame, centers as
-    python rows, the persisted vecs frame — caller unpersists after
-    the assigned write materializes it)."""
+    python (cell, center) rows, the persisted vecs frame — caller
+    unpersists once the fit's consumers no longer need the cache)."""
     from pyspark.ml.clustering import KMeans  # noqa: PLC0415
     from pyspark.ml.functions import array_to_vector  # noqa: PLC0415
 
@@ -565,6 +573,9 @@ def _kmeans_base_assign(df, n_clusters, vec_col, id_col, seed):
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("v"),
     ).withColumn("feat", array_to_vector("v"))
+    # KMeans.fit is iterative (maxIter scans): cache the projected input
+    # for the fit only — a lazy consumer re-reads the source once at
+    # execution instead of holding cache for the session
     vecs = vecs.persist()
     km = KMeans(
         k=n_clusters, seed=seed, featuresCol="feat", predictionCol="cell"
@@ -609,9 +620,15 @@ def read_ivf_centers(spark, path: str):
     own missing-path AnalysisException — a missing index is a real
     error for every centroid consumer (frozen-centroid assignment is
     meaningless without centroids). Existence probe is driver-local
-    os.path, same LOCAL-FILESYSTEM-ONLY stance as the swap helpers."""
-    import os  # noqa: PLC0415
+    os.path, same LOCAL-FILESYSTEM-ONLY stance as the swap helpers.
 
+    Heals a crashed store swap FIRST: between a compaction's or
+    rebuild's two renames the store (and its in-store ``_centers``)
+    sits at ``<path>__old``, and without the restore this read raises
+    PATH_NOT_FOUND. Every IVF reader reads the centroids before the
+    store, so centralizing the heal here covers them all (the same way
+    _read_seq_registry does for the registry)."""
+    recover_compaction_swap(path)
     inside = _centers_path(path)
     if os.path.exists(inside):
         return spark.read.parquet(inside)
@@ -648,8 +665,6 @@ def _write_ivf_sidecars(spark, path: str, centers) -> None:
     """Centers (in-store) + registry reset for a fresh base build at
     ``path``; retires a stale legacy external ``__centers`` sidecar so
     the fallback read can never resurrect superseded centroids."""
-    import shutil  # noqa: PLC0415
-
     _write_centers(spark, path, centers)
     _reset_seq_registry(spark, path)
     shutil.rmtree(path.rstrip("/") + "__centers", ignore_errors=True)
@@ -691,32 +706,33 @@ def rebuild_ivf_index(
     with a crash-safe swap instead of an in-place overwrite (which has
     a window where the store is absent and a concurrent probe reads an
     EMPTY index)."""
-    from chicago_crime_spark_ml_spark.sources.io import (  # noqa: PLC0415
-        commit_compaction_swap,
-        recover_compaction_swap,
-    )
-
     recover_compaction_swap(path)
     assigned, centers, vecs = _kmeans_base_assign(
         latest_df, n_clusters, vec_col, id_col, seed
     )
-    import os as _os  # noqa: PLC0415
-    import shutil as _shutil  # noqa: PLC0415
-
     staging = path.rstrip("/") + "__compacting"
     assigned.write.mode("overwrite").partitionBy("cell", "ingest").parquet(
         staging
     )
     vecs.unpersist()
     _write_centers(spark, staging, centers)
-    if _os.path.exists(path.rstrip("/")):
+    if os.path.exists(path.rstrip("/")):
         commit_compaction_swap(path, staging)
     else:
-        _os.rename(staging, path.rstrip("/"))
+        os.rename(staging, path.rstrip("/"))
     _reset_seq_registry(spark, path)
     # retire a legacy external sidecar so the fallback read can never
     # resurrect the pre-rebuild centroids
-    _shutil.rmtree(path.rstrip("/") + "__centers", ignore_errors=True)
+    shutil.rmtree(path.rstrip("/") + "__centers", ignore_errors=True)
+
+
+def _sq_dist(a: Column, b: Column) -> Column:
+    """Σ (aᵢ − bᵢ)² — KMeans' own metric, JVM-side."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
 
 
 def assign_to_centroids(
@@ -734,11 +750,7 @@ def assign_to_centroids(
     ``KMeansModel.transform`` computes, without needing the fitted
     model object (the centers sidecar is the model)."""
     v = F.col(vec_col).cast("array<double>")
-    d2 = F.aggregate(
-        F.zip_with(F.col("_v"), F.col("center"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = _sq_dist(F.col("_v"), F.col("center"))
     pick = F.min(F.struct(F.col("_d2"), F.col("cell")))
     return (
         df.select(F.col(id_col), v.alias("_v"))
@@ -791,11 +803,6 @@ def _read_seq_registry(spark, reg_path: str):
     would miss the registry and probe a mixed store as pure-legacy
     (surfacing superseded versions). Centralizing the heal here covers
     every registry consumer; one driver-local os.path.exists."""
-    from chicago_crime_spark_ml_spark.sources.io import (  # noqa: PLC0415
-        recover_compaction_swap,
-        try_read_parquet,
-    )
-
     recover_compaction_swap(reg_path)
     reg = try_read_parquet(spark, reg_path, schema=_SEQ_REG_SCHEMA)
     if reg is None:
@@ -902,16 +909,12 @@ def ivf_index_delta(
             f"ingest_id {ingest_id!r} must match [A-Za-z0-9._-]+ (it "
             "names a partition directory and a seq-registry partition)"
         )
-    from chicago_crime_spark_ml_spark.sources.io import (  # noqa: PLC0415
-        recover_compaction_swap,
-    )
-
-    # heal a crashed store compaction first (r13 review): writing this
-    # delta into a store whose data sits at `<path>__old` would
-    # re-create the live directory, and the next compaction's recovery
-    # preamble would then delete `__old` as garbage — losing the whole
-    # compacted history. Same rule as the streaming state reads.
-    recover_compaction_swap(path)
+    # read_ivf_centers heals a crashed store compaction first (r13
+    # review): writing this delta into a store whose data sits at
+    # `<path>__old` would re-create the live directory, and the next
+    # compaction's recovery preamble would then delete `__old` as
+    # garbage — losing the whole compacted history. Same rule as the
+    # streaming state reads.
     centers = read_ivf_centers(spark, path)
     # registered BEFORE the data write: a replay that crashed between
     # registration and the row write re-reads the SAME seq
@@ -940,7 +943,6 @@ def ivf_index_delta(
 def compact_ivf_index(
     spark,
     path: str,
-    n_tasks: int | None = None,
     files_per_cell: int = 1,
     replace_latest_by: str | None = None,
 ) -> int:
@@ -1003,11 +1005,6 @@ def compact_ivf_index(
     compacted partitions, because the sentinel can't collide with any
     legal ingest id. Run in the ingest maintenance window. Returns
     the file count written."""
-    from chicago_crime_spark_ml_spark.sources.io import (  # noqa: PLC0415
-        commit_compaction_swap,
-        recover_compaction_swap,
-    )
-
     recover_compaction_swap(path)
     # mergeSchema: a MIXED store (pre-seq base files + seq-stamped
     # delta files) would otherwise infer the base files' schema and
@@ -1015,7 +1012,7 @@ def compact_ivf_index(
     # the all-footers schema merge is the right place to pay for exact
     # migration (the probe hot path deliberately keeps the cheap read)
     df = spark.read.option("mergeSchema", "true").parquet(path)
-    n = n_tasks or max(1, spark.sparkContext.defaultParallelism)
+    n = max(1, spark.sparkContext.defaultParallelism)
     if files_per_cell < 1:
         raise ValueError(f"files_per_cell must be >= 1; got {files_per_cell}")
     if replace_latest_by is not None:
@@ -1099,16 +1096,13 @@ def compact_ivf_index(
         ).write.mode("append" if k else "overwrite").partitionBy(
             "cell", "ingest"
         ).parquet(staging)
-    import os as _os  # noqa: PLC0415
-    import shutil as _shutil  # noqa: PLC0415
-
     # carry the in-store centroids through the swap (r13 layout): the
     # cells are unchanged by compaction, so the centroids are too —
     # losing the _centers directory in the swap would orphan the store
     # from every probe. Legacy external sidecars are outside the store
     # directory and survive the swap untouched.
-    if _os.path.exists(_centers_path(path)):
-        _shutil.copytree(_centers_path(path), _centers_path(staging))
+    if os.path.exists(_centers_path(path)):
+        shutil.copytree(_centers_path(path), _centers_path(staging))
     commit_compaction_swap(path, staging)
     # Registry compaction (r13, VERDICT r12 #8): the __seq registry
     # grows one `ingest=<id>` directory per ingest ever seen and is
@@ -1120,7 +1114,6 @@ def compact_ivf_index(
     # the store. The mapping is PRESERVED, not truncated, so a replay
     # of any past ingest id still reuses its original seq.
     reg_path = path + "__seq"
-    recover_compaction_swap(reg_path)
     reg = _read_seq_registry(spark, reg_path)
     if reg is not None:
         reg_staging = reg_path + "__compacting"
@@ -1130,12 +1123,7 @@ def compact_ivf_index(
             f"{reg_staging}/ingest={COMPACTED_INGEST}"
         )
         commit_compaction_swap(reg_path, reg_staging)
-    import glob as _glob  # noqa: PLC0415
-    import os as _os  # noqa: PLC0415
-
-    return len(
-        _glob.glob(_os.path.join(path, "cell=*", "ingest=*", "part-*"))
-    )
+    return len(glob.glob(os.path.join(path, "cell=*", "ingest=*", "part-*")))
 
 
 def ivf_drift_metric(
@@ -1169,13 +1157,7 @@ def ivf_drift_metric(
         F.col(vec_col).cast("array<double>").alias("_v"),
         F.lit(True).alias("_delta"),
     )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("_v"), F.col("center"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = _sq_dist(F.col("_v"), F.col("center"))
     mind = (
         idx.unionByName(delta)
         .join(F.broadcast(centers.select("center")))
@@ -1251,26 +1233,11 @@ def probe_ivf_index(
     rows as NULL seq the same way, so its legacy-multi ids are also
     surfaced; pure-legacy stores (no registry) surface all versions
     by construction."""
-    import numpy as np  # noqa: PLC0415
-
-    from chicago_crime_spark_ml_spark.sources.io import (  # noqa: PLC0415
-        recover_compaction_swap,
-    )
-
-    # heal a crashed compaction/rebuild swap so the probe reads the
-    # restored store instead of erroring on a missing path (r13
-    # review; one driver-local os.path.exists)
-    recover_compaction_swap(path)
-    q = np.asarray(list(query_vec), dtype=float)
+    # read_ivf_centers heals a crashed compaction/rebuild swap first, so
+    # the probe reads the restored store instead of erroring on a
+    # missing path (r13 review)
     centers = read_ivf_centers(spark, path).collect()
-    sims = {
-        r.cell: float(
-            np.dot(q, r.center)
-            / (np.linalg.norm(q) * np.linalg.norm(r.center) + 1e-12)
-        )
-        for r in centers
-    }
-    probes = [c for c, _ in sorted(sims.items(), key=lambda kv: -kv[1])][:n_probe]
+    probes = _nearest_cells(query_vec, centers, n_probe)
     idx = spark.read.parquet(path)
     if "ingest_seq" not in idx.columns:
         # MIXED store: schema inference sampled a pre-seq base footer
@@ -1281,11 +1248,8 @@ def probe_ivf_index(
         # the probe hot path stays footer-sample cheap at scale.
         if _read_seq_registry(spark, path + "__seq") is not None:
             idx = spark.read.option("mergeSchema", "true").parquet(path)
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
-    score = cosine_expr(F.col("v"), qcol)
-    scored = idx.filter(
-        F.col("cell").isin([int(p) for p in probes])
-    ).select(
+    score = cosine_expr(F.col("v"), _query_lit(query_vec))
+    scored = idx.filter(F.col("cell").isin(probes)).select(
         F.col(id_col),
         *(
             ["ingest_seq", "ingest"]
@@ -1343,10 +1307,7 @@ def probe_ivf_index(
                 )
             )
         )
-    return (
-        scored.orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    return _top_k(scored, id_col, k)
 
 
 def cosine_topk_batch(
@@ -1359,7 +1320,6 @@ def cosine_topk_batch(
     corpus_id_col: str = "vec_id",
     n_blocks: int = 8,
     metric: str = "cosine",
-    pad: int = 8,
 ) -> DataFrame:
     """Exact top-k corpus neighbors for EVERY query row — the
     batch form a real retrieval/dedup pipeline runs (the single-vector
@@ -1374,11 +1334,11 @@ def cosine_topk_batch(
     exact-rescore phase: both sides are grouped into id-hashed blocks;
     every (query-block × corpus-block) pair — B_q·B_c bounded
     aggregated rows — computes one numpy matmul and emits only each
-    query's local top-(k+pad) CANDIDATE IDS against that corpus block
+    query's local top-(k+TOPK_PAD) CANDIDATE IDS against that corpus block
     (never the full score matrix, and no numpy scores leave the
     boundary). The candidates are then re-scored with the same float64
     cosine_expr Column algebra as cosine_topk on the ORIGINAL vectors,
-    and a per-query window over the ≤ (k+pad)·B_c candidates selects
+    and a per-query window over the ≤ (k+TOPK_PAD)·B_c candidates selects
     the global top-k by (round(cosine,4) desc, corpus_id asc) — the
     exact path's key. Emitted VALUES come from the same float64
     fold + half-away F.round as cosine_topk, so any candidate that
@@ -1386,16 +1346,16 @@ def cosine_topk_batch(
     key shape (half-away-rounded BLAS score, corpus_id asc — not the
     raw score), so selection can only disagree with the exact path
     when BLAS-vs-fold summation drift flips a score across a 0.00005
-    rounding boundary, and the ``pad`` extra candidates per
-    (query, corpus-block) absorb up to ``pad`` such flips. pad is
-    configurable; at the default 8 a wrong top-k row requires >8
-    last-ulp boundary flips within one block — raise it for corpora
-    engineered with mass ties at rounding boundaries.
-    Shuffle cost: O(|Q|·d + |C|·d) block build + O(|Q|·(k+pad)·B_c)
+    rounding boundary, and the TOPK_PAD extra candidates per
+    (query, corpus-block) absorb up to TOPK_PAD such flips: at 8 a
+    wrong top-k row requires >8 last-ulp boundary flips within one
+    block — raise it for corpora engineered with mass ties at rounding
+    boundaries.
+    Shuffle cost: O(|Q|·d + |C|·d) block build + O(|Q|·(k+TOPK_PAD)·B_c)
     candidate rows + two id-keyed rescore joins; compute
     O(|Q|·|C|·d/B_q·B_c) FLOPs per task in BLAS. The corpus is scanned
     twice (block build + rescore join) — the price of exactness.
-    NULL vectors on either side are dropped (see near_dup_pairs_blocked).
+    NULL vectors on either side are dropped (see _vector_blocks).
     """
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.window import Window  # noqa: PLC0415
@@ -1403,27 +1363,8 @@ def cosine_topk_batch(
     if metric not in ("cosine", "dot"):
         raise ValueError(f"metric must be 'cosine' or 'dot', got {metric!r}")
 
-    def blockify(df, vec_col, id_col, nb):
-        # raw vectors; normalization is one vectorized numpy divide in
-        # gen() — JVM transform(x → x/norm(v)) re-evaluates the norm
-        # fold per element (see near_dup_pairs_blocked)
-        v = F.col(vec_col).cast("array<double>")
-        return (
-            df.filter(F.col(vec_col).isNotNull())
-            .select(
-                F.col(id_col).alias("_id"),
-                v.alias("_u"),
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(nb)).alias("_bid"),
-            )
-            .groupBy("_bid")
-            .agg(
-                F.collect_list("_id").alias("_ids"),
-                F.collect_list("_u").alias("_vecs"),
-            )
-        )
-
-    qb = blockify(queries, query_vec_col, query_id_col, n_blocks)
-    cb = blockify(corpus, corpus_vec_col, corpus_id_col, n_blocks)
+    qb = _vector_blocks(queries, query_vec_col, query_id_col, n_blocks)
+    cb = _vector_blocks(corpus, corpus_vec_col, corpus_id_col, n_blocks)
     pairs = qb.alias("q").crossJoin(cb.alias("c")).select(
         F.col("q._ids").alias("qids"),
         F.col("q._vecs").alias("qv"),
@@ -1439,28 +1380,21 @@ def cosine_topk_batch(
             for qids, qv, cids, cv in zip(
                 pdf["qids"], pdf["qv"], pdf["cids"], pdf["cv"]
             ):
-                Q = np.array([np.asarray(r) for r in qv])
-                C = np.array([np.asarray(r) for r in cv])
                 cid = np.asarray(cids)
                 if metric == "cosine":
-                    qn = np.linalg.norm(Q, axis=1)
-                    cn = np.linalg.norm(C, axis=1)
-                    # zero-norm vectors score 0.0 everywhere — matches
-                    # the coalesce in cosine_expr, so the rescore keeps
-                    # the same ranking for any candidate emitted here
-                    qn[qn == 0] = np.inf
-                    cn[cn == 0] = np.inf
-                    S = (Q / qn[:, None]) @ (C / cn[:, None]).T
+                    S = _unit_rows(qv) @ _unit_rows(cv).T
                 else:  # raw inner product
+                    Q = np.array([np.asarray(r) for r in qv])
+                    C = np.array([np.asarray(r) for r in cv])
                     S = Q @ C.T
                 # local cut key == final window key shape: half-away
                 # round to 4 decimals (Spark's F.round; np.round is
                 # half-to-even, never use it here), then corpus_id asc.
                 # Only a BLAS-vs-fold last-ulp flip across a 0.00005
                 # boundary can make this key disagree with the exact
-                # rescored key; pad rows absorb those.
+                # rescored key; TOPK_PAD rows absorb those.
                 R = np.copysign(np.floor(np.abs(S) * 1e4 + 0.5), S)
-                kk = min(k + pad, S.shape[1])
+                kk = min(k + TOPK_PAD, S.shape[1])
                 for row, qid in enumerate(qids):
                     order = np.lexsort((cid, -R[row]))[:kk]
                     out["query_id"].extend([qid] * len(order))

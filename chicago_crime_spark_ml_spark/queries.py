@@ -61,6 +61,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def _vec0(emb: DataFrame) -> list[float]:
+    """vec_id 0's embedding — the query vector of the embedding queries
+    (one bounded driver fetch)."""
+    return emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents with the narrow scan fanned out (text.parallelize_
     narrow_scan): the corpus parquet arrives as 1–2 splits at bench
@@ -2518,7 +2524,7 @@ def ann_cosine_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chicago_crime_spark_ml_spark.operators.similarity import cosine_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
+    qvec = _vec0(emb)
     return cosine_topk(emb, qvec, k=10)
 
 
@@ -2726,36 +2732,6 @@ def embedding_dedup_incremental(
     ).select(
         "vec_id", F.coalesce("label", "vec_id").alias("cluster_id")
     )
-
-
-# NOT @query-registered (VERDICT r5 #6): the LSH hash family is
-# engine-specific, so a registered entry could only ever earn the
-# driver's `err: no_oracle` row. The REGISTERED certification surface
-# is ann_lsh_recall_check, which runs this exact builder and
-# oracle-pins its accuracy contract.
-def ann_lsh_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-projection LSH ANN for the vec_id=0 query (cosine via
-    normalized Euclidean). A pytest asserts recall vs brute force."""
-    from chicago_crime_spark_ml_spark.operators.similarity import ann_lsh_neighbors
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    return ann_lsh_neighbors(emb, qvec, k=10)
-
-
-# NOT @query-registered: the KMeans quantizer is engine-specific (same
-# rationale as ann_lsh_top10); certified via ann_ivf_recall_check.
-def ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN (k-means cells, probe the 4 nearest of 16) for the
-    vec_id=0 query — the FAISS-style learned-partition tier; at 100 TB
-    the cell id doubles as the physical partition key so probing prunes
-    partitions. Pytests assert full-probe ≡ brute force and probed
-    recall."""
-    from chicago_crime_spark_ml_spark.operators.similarity import ann_ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    return ann_ivf_topk(emb, qvec, k=10, n_clusters=16, n_probe=4)
 
 
 @query(
@@ -4036,8 +4012,7 @@ def _shifted_vectors(emb: DataFrame, pred: Column, delta: float) -> DataFrame:
 def _ivf_query_vector(emb: DataFrame, delta: float) -> list[float]:
     """vec 0's embedding shifted by ``delta``: the IVF certs' query
     vector, its latest version (cosine 1.0 with itself)."""
-    row = emb.filter(F.col("vec_id") == 0).first()
-    return [float(x) + delta for x in row["embedding"]]
+    return [x + delta for x in _vec0(emb)]
 
 
 def _ivf_replace_probes(
@@ -5464,7 +5439,7 @@ def ann_quantized_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
+    qvec = _vec0(emb)
     exact = cosine_topk(emb, qvec, k=10).select("vec_id")
     top1 = exact.limit(1)
     approx = cosine_topk_quantized(
@@ -7396,7 +7371,7 @@ def ann_lsh_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
+    qvec = _vec0(emb)
     exact = cosine_topk(emb, qvec, k=10).select("vec_id")
     top1 = exact.limit(1)
     approx = ann_lsh_neighbors(emb, qvec, k=10).select("vec_id")
@@ -7899,7 +7874,7 @@ def ann_ivf_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
+    qvec = _vec0(emb)
     exact = cosine_topk(emb, qvec, k=10).select("vec_id")
     top1 = exact.limit(1)
     approx = ann_ivf_topk(
@@ -7928,7 +7903,7 @@ def ann_quantized_agreement_check(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
+    qvec = _vec0(emb)
     exact = cosine_topk(emb, qvec, k=10).select("vec_id")
     top1 = exact.limit(1)
     approx = cosine_topk_quantized(quantize_embeddings(emb), qvec, k=10).select(

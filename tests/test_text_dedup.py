@@ -608,21 +608,67 @@ def test_minhash_bands_are_distinct_hash_functions(spark):
 
 def test_blocked_near_dup_pairs_ignores_null_vectors(spark):
     """A NULL embedding must be dropped, not misalign the block's
-    id/vector collect_lists (collect_list skips NULLs per-column)."""
+    id/vector collect_lists (collect_list skips NULLs per-column) — on
+    every caller of the one block build: the batch and delta near-dup
+    operators (NULL in the corpus and in the delta) and the batch top-k
+    (NULL query row and NULL corpus row)."""
     from chicago_crime_spark_ml_spark.operators.similarity import (
+        cosine_topk_batch,
+        near_dup_delta_blocked,
         near_dup_pairs_blocked,
     )
 
+    schema = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
     rows = [
         (1, [1.0, 0.0, 0.0]),
         (2, [1.0, 0.01, 0.0]),   # near-dup of 1
         (3, None),
         (4, [0.0, 1.0, 0.0]),    # orthogonal
     ]
-    df = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    df = spark.createDataFrame(rows, schema)
     got = {(r.id_a, r.id_b) for r in
            near_dup_pairs_blocked(df, threshold=0.9, n_blocks=2).collect()}
     assert got == {(1, 2)}
+
+    delta = spark.createDataFrame(
+        [
+            (5, None),
+            (6, [0.0, 1.0, 0.01]),   # near-dup of 4
+            (7, [0.0, 0.0, 1.0]),    # orthogonal to everything
+        ],
+        schema,
+    )
+    got = {(r.id_a, r.id_b) for r in near_dup_delta_blocked(
+        df, delta, threshold=0.9, n_blocks=2
+    ).collect()}
+    assert got == {(4, 6)}
+
+    queries = spark.createDataFrame(
+        [(10, [1.0, 0.0, 0.0]), (11, None), (12, [0.0, 1.0, 0.0])],
+        "query_id BIGINT, embedding ARRAY<DOUBLE>",
+    )
+    got = {(r.query_id, r.rank): r.vec_id for r in cosine_topk_batch(
+        queries, df, k=2, n_blocks=2
+    ).collect()}
+    assert got == {(10, 1): 1, (10, 2): 2, (12, 1): 4, (12, 2): 2}
+
+
+def test_nearest_cells_breaks_ties_by_lowest_cell():
+    """Probe order is best cosine first, then lowest cell id — whatever
+    order the centers arrive in (Spark-free)."""
+    from chicago_crime_spark_ml_spark.operators.similarity import (
+        _nearest_cells,
+    )
+
+    centers = [
+        (3, [1.0, 0.0]),
+        (0, [0.0, 1.0]),
+        (2, [1.0, 0.0]),
+        (1, [1.0, 0.0]),
+    ]
+    assert _nearest_cells([2.0, 0.0], centers, 2) == [1, 2]
+    assert _nearest_cells([2.0, 0.0], centers, 4) == [1, 2, 3, 0]
+    assert _nearest_cells([0.0, 1.0], centers, 1) == [0]
 
 
 def test_ivf_index_probe_equals_refit_and_prunes_partitions(spark, sf_dir, emb, tmp_path):
@@ -1230,6 +1276,26 @@ def test_ivf_drift_metric_trips_on_shifted_delta(
     far = ivf_drift_metric(spark, path, shifted).collect()[0]
     assert far.drift_ratio > 10
     assert far.rebuild_recommended
+
+
+def test_ivf_drift_metric_heals_crashed_swap(
+    spark, emb, tmp_path, ivf_base_old8
+):
+    """A compaction that crashed between its two renames leaves the
+    store at ``path__old``: the drift metric restores it first and
+    returns the healthy store's row instead of raising PATH_NOT_FOUND."""
+    import os
+
+    from chicago_crime_spark_ml_spark.operators.similarity import (
+        ivf_drift_metric,
+    )
+
+    delta = emb.filter(F.col("vec_id") % 5 == 0)
+    path = _copy_ivf_store(ivf_base_old8, tmp_path, "ivf_drift_crash")
+    healthy = ivf_drift_metric(spark, path, delta).collect()
+    os.rename(path, path + "__old")
+    assert ivf_drift_metric(spark, path, delta).collect() == healthy
+    assert os.path.exists(path) and not os.path.exists(path + "__old")
 
 
 def test_near_dup_delta_blocked_equals_rebuild(spark, emb):
